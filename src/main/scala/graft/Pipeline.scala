@@ -68,19 +68,19 @@ case class PipelineConfig(
       * checkpoint — is at most this. Sized by BYTES, not rows: the projection
       * carries ctx strings whose width varies 100x with ctxWindow, and a
       * row-count gate could sail past Spark's 8 GiB broadcast-table hard
-      * limit (and driver memory) on wide contexts. Default -1 = derive from
-      * the compute topology: min(2 GiB, driver max heap / 10) — the driver
-      * must also hold the CC loop's bookkeeping, and the broadcast build is
-      * the pipeline's one driver-serial term (measured ~506s at 9.6M pages
-      * on a 7.75M-row projection), so a fixed 2 GiB cap was generous for
-      * small drivers (round-4 advice). */
+      * limit (and driver memory) on wide contexts. Default -1 = the
+      * heap-derived Cut.defaultBroadcastCap: the broadcast build is the
+      * pipeline's one driver-serial term (measured ~506s at 9.6M pages on a
+      * 7.75M-row projection), so a fixed 2 GiB cap was generous for small
+      * drivers (round-4 advice). Incremental.attach also plans its whole
+      * algebra under this cap (Cut.withBroadcastCap). */
     broadcastMentionsMaxBytes: Long = -1L) {
 
   /** Resolved broadcast cap: explicit positive value, or the heap-derived
     * default. */
   def resolvedBroadcastMentionsMaxBytes: Long =
     if (broadcastMentionsMaxBytes >= 0) broadcastMentionsMaxBytes
-    else math.min(2L * 1024 * 1024 * 1024, Runtime.getRuntime.maxMemory / 10)
+    else graft.ops.Cut.defaultBroadcastCap
 }
 
 case class PipelineResult(

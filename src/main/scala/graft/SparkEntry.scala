@@ -295,8 +295,8 @@ object SparkEntry {
     // g15: INCREMENTAL ER, cross-engine proof row. The Spark side resolves a
     // deterministic 75% of the fixture as a base corpus, then ATTACHES the
     // remaining 25% as a delta batch touching only delta-adjacent state
-    // (ops/Portable.erClustersPortableIncremental — the portable form of
-    // ops/Incremental.attach). The oracle replays the FULL BATCH twin over
+    // (ops/Portable.erClustersPortableIncremental — the shared
+    // DeltaDedup.attach algebra over the twin's bucket table). The oracle replays the FULL BATCH twin over
     // the whole fixture (the g01 SQL): hash equality proves the delta-
     // maintenance algebra equals a from-scratch run in an independent
     // engine. Production (xxhash/ensemble) incremental attach is pinned to

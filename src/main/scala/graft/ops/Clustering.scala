@@ -96,7 +96,6 @@ object Clustering {
     // but a flat pin OOMs once edges/cores no longer fits a task's sort
     // (9.6M pages / 56g heap, measured): large inputs must pass a
     // data-scaled `partitions` (Partitioning.ccPartitions; Pipeline does).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     // CC rounds are NOT CPU-heavy per byte (hash agg + join over two id
     // columns), so AQE's byte-targeted coalescing is the right parallelism
     // policy inside the loop: a fixture-sized round collapses to 1-2 tasks
@@ -115,33 +114,24 @@ object Clustering {
     // scoped confs are wrong for (measured: the whole 800-page flagship
     // upstream ran as CC "round 0" at ~12s). One eager cut of the distinct
     // edge set, executed under the session's own parallelism policy.
-    val edgesIn = edges0.select(col("u"), col("v"))
+    val observed = edges0.select(col("u"), col("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
-    val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val advKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prevPf = spark.conf.getOption(pfKey)
-    val prevAdv = spark.conf.getOption(advKey)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(2, partitions.getOrElse(spark.sparkContext.defaultParallelism)).toString)
-    spark.conf.set(pfKey, "false")
+      .observe("cc_input_edges", count(lit(1)))
+    val edgesIn = observed.localCheckpoint(true)
+    // an edgeless graph is its own fixpoint (a small delta's re-solve
+    // subgraph often is): skip the loop and its per-round jobs
+    if (observed.queryExecution.observedMetrics("cc_input_edges").getLong(0) == 0L)
+      return edgesIn.select(col("u").as("url"), col("v").as("cluster_id"))
     // small advisory: the coalescer only MERGES below the pinned partition
     // count, so a big run (partitions sized by Partitioning.ccPartitions,
     // each >> 1m) is untouched, a mid-size graph keeps a handful of tasks,
     // and only genuinely tiny rounds collapse to 1
-    spark.conf.set(advKey, "1m")
-    try connectedComponentsInner(spark, edgesIn, checkpointDir, maxIter, roundsPerCut)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevPf match {
-        case Some(v) => spark.conf.set(pfKey, v)
-        case None => spark.conf.unset(pfKey)
-      }
-      prevAdv match {
-        case Some(v) => spark.conf.set(advKey, v)
-        case None => spark.conf.unset(advKey)
-      }
-    }
+    Cut.withConf(spark,
+      "spark.sql.shuffle.partitions" ->
+        math.max(2, partitions.getOrElse(spark.sparkContext.defaultParallelism)).toString,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m")(
+      connectedComponentsInner(spark, edgesIn, checkpointDir, maxIter, roundsPerCut))
   }
 
   /** Inner loop; `edges0` must already be the distinct (u, v) edge set,

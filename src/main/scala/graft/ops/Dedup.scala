@@ -62,14 +62,8 @@ object Dedup {
     val keyed =
       if (persist) keyed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else keyed0
-    val sized = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket && col("n") > 1)
-    val inBuckets = keyed.join(sized, "bucket")
-    val cands = inBuckets.as("a").join(inBuckets.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    (cands, () => { if (persist) keyed.unpersist(); () })
+    (DeltaDedup.cappedPairs(keyed, maxBucket),
+      () => { if (persist) keyed.unpersist(); () })
   }
 
   /** Unmanaged candidate view (tests / one-shot sessions): built with
@@ -220,14 +214,7 @@ object Dedup {
         Ann.signBucket(col(vecCol), nPlanes, seed).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val ids = bucketed.select("id", "bucket")
-      val sized = ids.groupBy("bucket").agg(count(lit(1)).as("n"))
-        .filter(col("n") <= maxBucket && col("n") > 1)
-      val inB = ids.join(sized, "bucket")
-      val cands = inB.as("a").join(inB.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
+      val cands = DeltaDedup.cappedPairs(bucketed.select("id", "bucket"), maxBucket)
       val vecs = bucketed.select(col("id"), col("v"))
       val verified = cands
         .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
@@ -288,7 +275,7 @@ object Dedup {
     val ids = cands.select(col("id_a").as("id"))
       .union(cands.select(col("id_b").as("id"))).distinct()
     val texts = docs.select(col(idCol).as("id"), col(textCol).as("t"))
-      .join(broadcast(ids), Seq("id"), "left_semi")
+      .join(ids, Seq("id"), "left_semi")
       .select(col("id"), shingle_hashes(lower(col("t")), 5).as("sh"))
     cands
       .join(texts.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -306,11 +293,11 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bands: Int = 16, rows: Int = 4,
       maxBucket: Int = 256, seed: Long = 42L): MinhashDedupState = {
-    def keep(df: DataFrame) = df.localCheckpoint(eager = true)
-    val keyed = keep(minhashBandTable(docs, idCol, textCol, bands, rows, seed))
-    val edges = keep(minhashVerify(docs, idCol, textCol, threshold)(
+    val keyed = Cut.keep("mh_keyed")(
+      minhashBandTable(docs, idCol, textCol, bands, rows, seed))
+    val edges = Cut.keep("mh_edges")(minhashVerify(docs, idCol, textCol, threshold)(
       DeltaDedup.cappedPairs(keyed, maxBucket)))
-    val assign = keep(Clustering.clusters(spark,
+    val assign = Cut.keep("mh_assign")(Clustering.clusters(spark,
       edges.select(DeltaDedup.key(col("id_a")).as("url_a"),
         DeltaDedup.key(col("id_b")).as("url_b"), lit(true).as("is_match")),
       docs.select(DeltaDedup.key(col(idCol)).as("url"))))
@@ -347,8 +334,8 @@ object Dedup {
       allDocs: DataFrame, deltaDocs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.8, bands: Int = 16,
       rows: Int = 4, maxBucket: Int = 256, seed: Long = 42L): DedupAttachResult = {
-    val keyedD = minhashBandTable(deltaDocs, idCol, textCol, bands, rows, seed)
-      .localCheckpoint(eager = true)
+    val keyedD = Cut.keep("mh_keyedD")(
+      minhashBandTable(deltaDocs, idCol, textCol, bands, rows, seed))
     // the base slice stays the committed index — only the delta is plan-cut;
     // Catalyst pushes the is_delta filters into the union branches, so the
     // core's keyedB/keyedD reads never scan the other side
@@ -357,6 +344,7 @@ object Dedup {
     val att = DeltaDedup.attach(spark, keyedAll, state.edges, state.assign,
       minhashVerify(allDocs, idCol, textCol, threshold), maxBucket)
     val mergedEdges = state.edges
+      // merged view, planned by the caller after the cap scope: hinted
       .join(broadcast(att.removed), Seq("id_a", "id_b"), "left_anti")
       .unionByName(att.added)
     val dups = att.assign.filter(col("url") =!= col("cluster_id"))
@@ -382,13 +370,14 @@ object Dedup {
       remainingDocs: DataFrame, deletedIds: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, maxBucket: Int = 256): DedupAttachResult = {
-    val delIds = deletedIds.select(col(idCol).as("id"))
-      .localCheckpoint(eager = true)
+    val delIds = Cut.keep("mh_delIds")(deletedIds.select(col(idCol).as("id")))
     val att = DeltaDedup.detach(spark, state.keyed, delIds, state.edges,
       state.assign, minhashVerify(remainingDocs, idCol, textCol, threshold),
       maxBucket)
+    // merged view, planned by the caller after the cap scope: hinted
     val mergedKeyed = state.keyed.join(broadcast(delIds), Seq("id"), "left_anti")
     val mergedEdges = state.edges
+      // merged view, planned by the caller after the cap scope: hinted
       .join(broadcast(att.removed), Seq("id_a", "id_b"), "left_anti")
       .unionByName(att.added)
     val dups = att.assign.filter(col("url") =!= col("cluster_id"))

@@ -35,18 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object DeltaDedup {
 
-  /** Small pool for overlapping independent attach legs (same pattern as
-    * Incremental.attachEc — Spark runs jobs from several threads side by
-    * side, so the added-edge verification overlaps the removed-branch
-    * survivor scans instead of serializing behind them). */
-  private lazy val keepEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-deltadedup-keep")
-        t.setDaemon(true)
-        t
-      }))
-
   /** Edge flips + maintained assignment from one inserts-only attach. */
   final case class Attached(
       /** (url, cluster_id) lpad-keyed assignment over base ∪ delta nodes. */
@@ -95,144 +83,135 @@ object DeltaDedup {
     */
   def attach(spark: SparkSession, keyedAll: DataFrame, baseEdges: DataFrame,
       baseAssign: DataFrame, verify: DataFrame => DataFrame,
-      maxBucket: Int, keyFn: Column => Column = key): Attached = {
-    // eager plan-cut leaves, not persist(): each keep() below roots several
-    // downstream self-referencing branches, and without a LOGICAL-plan cut
-    // the diff algebra's analyzed plan grows exponentially (persist() caches
-    // data but keeps the full plan; see Portable.erClustersPortableIncremental)
-    def keep(name: String)(df: DataFrame): DataFrame = {
-      Diag.dumpPlan(s"dd_$name", df)
-      df.localCheckpoint(eager = true)
+      maxBucket: Int, keyFn: Column => Column = key): Attached =
+    Cut.withBroadcastCap(spark, Cut.defaultBroadcastCap) { scope =>
+      val keyedB = keyedAll.filter(!col("is_delta"))
+      val keyedD = keyedAll.filter(col("is_delta"))
+
+      // Every probe into the committed base below is a kept (delta-
+      // proportional) frame with exact stats (Cut), so under the scope's
+      // broadcast cap the planner broadcasts it and reads the band index as a
+      // streaming scan — never shuffled. With the pre-computation estimate a
+      // bare checkpoint keeps, each prune sort-merge-shuffled the whole index
+      // (the measured 2.4M-doc attach floor, 145s, SCALING.json). Probe sets
+      // are bounded by ~bands x |delta| rows (plus the rare cap-crossing
+      // neighborhoods); one past the cap shuffles instead of failing.
+      val touched = Cut.keep("dd_touched")(keyedD.select("bucket").distinct())
+
+      // touched-bucket membership under old and new views. n_old is DERIVED
+      // (n_new minus the bucket's delta rows — exact under inserts-only, a
+      // band table holds one row per (id, band)) instead of aggregating a
+      // second scan of the base index.
+      val oldT = keyedB.join(touched, Seq("bucket"), "left_semi")
+      val newT = Cut.keep("dd_newT")(oldT.unionByName(keyedD))
+      val sizes = Cut.keep("dd_sizes")(newT
+        .groupBy("bucket").agg(count(lit(1)).as("n_new"))
+        .join(keyedD.groupBy("bucket").agg(count(lit(1)).as("n_d")),
+          Seq("bucket"), "left")
+        .select(col("bucket"),
+          (col("n_new") - coalesce(col("n_d"), lit(0L))).as("n_old"),
+          col("n_new")))
+      val eligNew = sizes
+        .filter(col("n_new") > 1 && col("n_new") <= maxBucket).select("bucket")
+
+      // ADDED candidates: delta members × co-members in new-eligible buckets
+      val newTElig = newT.join(eligNew, Seq("bucket"), "left_semi")
+      // materializes concurrently with the removed-candidate branch below
+      // (both depend only on the kept newT/sizes)
+      val addedCandF = Cut.keepAsync("dd_addedCand")(newTElig
+        .filter(col("is_delta"))
+        .select(col("bucket"), col("id").as("id_d"))
+        .join(newTElig.select(col("bucket"), col("id").as("id_o")), Seq("bucket"))
+        .filter(col("id_d") =!= col("id_o"))
+        .select(least(col("id_d"), col("id_o")).as("id_a"),
+          greatest(col("id_d"), col("id_o")).as("id_b"))
+        .distinct())
+
+      // REMOVED candidates: the whole pair set of buckets that CROSSED the
+      // stop-key cap on insert, minus pairs another still-eligible bucket
+      // (untouched — full size recomputed only for the buckets involved — or
+      // touched-and-new-eligible) still generates
+      val crossed = sizes.filter(col("n_old") > 1 && col("n_old") <= maxBucket &&
+        col("n_new") > maxBucket).select("bucket")
+      val crossedMembers = newT.join(crossed, Seq("bucket"), "left_semi")
+        .filter(!col("is_delta"))
+      val removedCand0 = Cut.keep("dd_removedCand0")(crossedMembers.as("a")
+        .join(crossedMembers.as("b"),
+          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct())
+      val removedIds = Cut.keep("dd_removedIds")(removedCand0
+        .select(col("id_a").as("id"))
+        .union(removedCand0.select(col("id_b").as("id"))).distinct())
+      // the added-edge verification (shingle hydration + pair kernels) is the
+      // expensive leg — overlap it with the removed-branch survivor scans
+      val addedCand = Cut.await(addedCandF)
+      val addedLF = Cut.keepAsync("dd_addedL")(verify(addedCand)
+        .join(baseEdges.join(addedCand.select("id_a").distinct(),
+          Seq("id_a"), "left_semi"), Seq("id_a", "id_b"), "left_anti"))
+      val untouchedOfRemoved = Cut.keep("dd_untouchedOfRemoved")(keyedB
+        .join(removedIds, Seq("id"), "left_semi")
+        .join(touched, Seq("bucket"), "left_anti"))
+      val untouchedEligSizes = keyedB
+        .join(untouchedOfRemoved.select("bucket").distinct(),
+          Seq("bucket"), "left_semi")
+        .groupBy("bucket").agg(count(lit(1)).as("n"))
+        .filter(col("n") > 1 && col("n") <= maxBucket)
+      val gen = untouchedOfRemoved
+        .join(untouchedEligSizes.select("bucket"),
+          Seq("bucket"), "left_semi")
+        .select("bucket", "id")
+        .unionByName(newTElig.join(removedIds, Seq("id"), "left_semi")
+          .select("bucket", "id"))
+      val survivors = removedCand0
+        .join(gen.select(col("bucket"), col("id").as("id_a")), Seq("id_a"))
+        .join(gen.select(col("bucket"), col("id").as("id_b")),
+          Seq("id_b", "bucket"), "left_semi")
+        .select("id_a", "id_b").distinct()
+      val trueRemoved = removedCand0.join(survivors, Seq("id_a", "id_b"), "left_anti")
+
+      // edge flips: pair-intrinsic verification over immutable sets. The
+      // anti-join's base side is pre-pruned to the delta ids' edges (an
+      // anti-join result only depends on right rows whose keys appear on the
+      // left), so the base edge table is never shuffled either.
+      val removedL = Cut.keep("dd_removedL")(baseEdges.join(trueRemoved,
+        Seq("id_a", "id_b"), "left_semi"))
+      val addedL = Cut.await(addedLF)
+      val removedK = removedL.select(keyFn(col("id_a")).as("url_a"),
+        keyFn(col("id_b")).as("url_b"))
+      val addedK = addedL.select(keyFn(col("id_a")).as("url_a"),
+        keyFn(col("id_b")).as("url_b"))
+
+      // dissolve components an edge flip touches; re-solve with delta nodes;
+      // everything else keeps its base label (same pattern as the ER attach)
+      val changedUrls = removedK.select(col("url_a").as("url"))
+        .union(removedK.select(col("url_b").as("url")))
+        .union(addedK.select(col("url_a").as("url")))
+        .union(addedK.select(col("url_b").as("url")))
+        .distinct()
+      val affectedLabels = Cut.keep("dd_affectedLabels")(baseAssign
+        .join(changedUrls, Seq("url"), "left_semi")
+        .select("cluster_id").distinct())
+      val memberUrls = Cut.keep("dd_memberUrls")(baseAssign
+        .join(affectedLabels, Seq("cluster_id"), "left_semi")
+        .select("url"))
+      val subNodes = memberUrls
+        .union(keyedD.select(keyFn(col("id")).as("url")).distinct()).distinct()
+      val memberEdges = baseEdges
+        .select(keyFn(col("id_a")).as("url_a"), keyFn(col("id_b")).as("url_b"))
+        .join(memberUrls.withColumnRenamed("url", "url_a"),
+          Seq("url_a"), "left_semi")
+      val subEdges = memberEdges
+        .join(removedK, Seq("url_a", "url_b"), "left_anti")
+        .unionByName(addedK)
+        .withColumn("is_match", lit(true))
+      val resolved = scope.outside(Clustering.clusters(spark, subEdges, subNodes))
+      val assign = Cut.keep("dd_assign")(baseAssign
+        .join(affectedLabels, Seq("cluster_id"), "left_anti")
+        .select("url", "cluster_id")
+        .unionByName(resolved.select("url", "cluster_id")))
+      Attached(assign, removedL, addedL)
     }
-    def keepF(name: String)(df: DataFrame) =
-      scala.concurrent.Future(keep(name)(df))(keepEc)
-    def await(f: scala.concurrent.Future[DataFrame]): DataFrame =
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-    val keyedB = keyedAll.filter(!col("is_delta"))
-    val keyedD = keyedAll.filter(col("is_delta"))
-
-    // Every probe into the committed base below BROADCASTS its (delta-
-    // proportional) probe set: the band index is only ever read as a
-    // streaming scan through a broadcast hash join — never shuffled. The
-    // unhinted semi-joins here were the measured 2.4M-doc attach floor
-    // (145s, SCALING.json): Spark's size estimate for plan-cut frames
-    // defaults to "huge", so each prune sort-merge-shuffled the whole
-    // index. Probe sets are bounded by ~bands x |delta| rows (plus the
-    // rare cap-crossing neighborhoods); a delta so large that its bucket
-    // set exceeds the broadcast cap should re-dedup the corpus instead.
-    val touched = keep("touched")(keyedD.select("bucket").distinct())
-
-    // touched-bucket membership under old and new views. n_old is DERIVED
-    // (n_new minus the bucket's delta rows — exact under inserts-only, a
-    // band table holds one row per (id, band)) instead of aggregating a
-    // second scan of the base index.
-    val oldT = keyedB.join(broadcast(touched), Seq("bucket"), "left_semi")
-    val newT = keep("newT")(oldT.unionByName(keyedD))
-    val sizes = keep("sizes")(newT.groupBy("bucket").agg(count(lit(1)).as("n_new"))
-      .join(keyedD.groupBy("bucket").agg(count(lit(1)).as("n_d")),
-        Seq("bucket"), "left")
-      .select(col("bucket"),
-        (col("n_new") - coalesce(col("n_d"), lit(0L))).as("n_old"),
-        col("n_new")))
-    val eligNew = sizes
-      .filter(col("n_new") > 1 && col("n_new") <= maxBucket).select("bucket")
-
-    // ADDED candidates: delta members × co-members in new-eligible buckets
-    val newTElig = newT.join(broadcast(eligNew), Seq("bucket"), "left_semi")
-    // materializes concurrently with the removed-candidate branch below
-    // (both depend only on the kept newT/sizes)
-    val addedCandF = keepF("addedCand")(newTElig.filter(col("is_delta"))
-      .select(col("bucket"), col("id").as("id_d"))
-      .join(newTElig.select(col("bucket"), col("id").as("id_o")), Seq("bucket"))
-      .filter(col("id_d") =!= col("id_o"))
-      .select(least(col("id_d"), col("id_o")).as("id_a"),
-        greatest(col("id_d"), col("id_o")).as("id_b"))
-      .distinct())
-
-    // REMOVED candidates: the whole pair set of buckets that CROSSED the
-    // stop-key cap on insert, minus pairs another still-eligible bucket
-    // (untouched — full size recomputed only for the buckets involved — or
-    // touched-and-new-eligible) still generates
-    val crossed = sizes.filter(col("n_old") > 1 && col("n_old") <= maxBucket &&
-      col("n_new") > maxBucket).select("bucket")
-    val crossedMembers = newT.join(broadcast(crossed), Seq("bucket"), "left_semi")
-      .filter(!col("is_delta"))
-    val removedCand0 = keep("removedCand0")(crossedMembers.as("a").join(crossedMembers.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct())
-    val removedIds = keep("removedIds")(removedCand0.select(col("id_a").as("id"))
-      .union(removedCand0.select(col("id_b").as("id"))).distinct())
-    // the added-edge verification (shingle hydration + pair kernels) is the
-    // expensive leg — overlap it with the removed-branch survivor scans
-    val addedCand = await(addedCandF)
-    val addedLF = keepF("addedL")(verify(addedCand)
-      .join(broadcast(baseEdges.join(
-        broadcast(addedCand.select("id_a").distinct()),
-        Seq("id_a"), "left_semi")), Seq("id_a", "id_b"), "left_anti"))
-    val untouchedOfRemoved = keep("untouchedOfRemoved")(keyedB
-      .join(broadcast(removedIds), Seq("id"), "left_semi")
-      .join(broadcast(touched), Seq("bucket"), "left_anti"))
-    val untouchedEligSizes = keyedB
-      .join(broadcast(untouchedOfRemoved.select("bucket").distinct()),
-        Seq("bucket"), "left_semi")
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1 && col("n") <= maxBucket)
-    val gen = untouchedOfRemoved
-      .join(broadcast(untouchedEligSizes.select("bucket")),
-        Seq("bucket"), "left_semi")
-      .select("bucket", "id")
-      .unionByName(newTElig.join(broadcast(removedIds), Seq("id"), "left_semi")
-        .select("bucket", "id"))
-    val survivors = removedCand0
-      .join(gen.select(col("bucket"), col("id").as("id_a")), Seq("id_a"))
-      .join(gen.select(col("bucket"), col("id").as("id_b")),
-        Seq("id_b", "bucket"), "left_semi")
-      .select("id_a", "id_b").distinct()
-    val trueRemoved = removedCand0.join(survivors, Seq("id_a", "id_b"), "left_anti")
-
-    // edge flips: pair-intrinsic verification over immutable sets. The
-    // anti-join's base side is pre-pruned to the delta ids' edges (an
-    // anti-join result only depends on right rows whose keys appear on the
-    // left), so the base edge table is never shuffled either.
-    val removedL = keep("removedL")(baseEdges.join(broadcast(trueRemoved),
-      Seq("id_a", "id_b"), "left_semi"))
-    val addedL = await(addedLF)
-    val removedK = removedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-    val addedK = addedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-
-    // dissolve components an edge flip touches; re-solve with delta nodes;
-    // everything else keeps its base label (same pattern as the ER attach)
-    val changedUrls = removedK.select(col("url_a").as("url"))
-      .union(removedK.select(col("url_b").as("url")))
-      .union(addedK.select(col("url_a").as("url")))
-      .union(addedK.select(col("url_b").as("url")))
-      .distinct()
-    val affectedLabels = keep("affectedLabels")(baseAssign
-      .join(broadcast(changedUrls), Seq("url"), "left_semi")
-      .select("cluster_id").distinct())
-    val memberUrls = keep("memberUrls")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url"))
-    val subNodes = memberUrls
-      .union(keyedD.select(keyFn(col("id")).as("url")).distinct()).distinct()
-    val memberEdges = baseEdges
-      .select(keyFn(col("id_a")).as("url_a"), keyFn(col("id_b")).as("url_b"))
-      .join(broadcast(memberUrls.withColumnRenamed("url", "url_a")),
-        Seq("url_a"), "left_semi")
-    val subEdges = memberEdges
-      .join(broadcast(removedK), Seq("url_a", "url_b"), "left_anti")
-      .unionByName(addedK)
-      .withColumn("is_match", lit(true))
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
-    val assign = keep("assign")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id")))
-    Attached(assign, removedL, addedL)
-  }
 
   /** Detach a delete batch from a committed dedup state: produce the cluster
     * assignment the FULL BATCH dedup would produce over base ∖ deleted —
@@ -255,95 +234,94 @@ object DeltaDedup {
     *    everything else keeps its base label verbatim.
     *
     * @param baseKeyed   committed (id, bucket) band index of the base.
-    * @param deletedIds  (id) docs to remove; must be ⊆ base ids.
+    * @param deletedIds  (id) docs to remove; must be ⊆ base ids. Read several
+    *                    times below: pass a kept frame (or a deterministic
+    *                    filter of one).
     * @param verify      as in attach; only ever called on remaining ids.
     */
   def detach(spark: SparkSession, baseKeyed: DataFrame, deletedIds: DataFrame,
       baseEdges: DataFrame, baseAssign: DataFrame,
       verify: DataFrame => DataFrame, maxBucket: Int,
-      keyFn: Column => Column = key): Attached = {
-    def keep(name: String)(df: DataFrame): DataFrame = {
-      Diag.dumpPlan(s"ddx_$name", df)
-      df.localCheckpoint(eager = true)
+      keyFn: Column => Column = key): Attached =
+    Cut.withBroadcastCap(spark, Cut.defaultBroadcastCap) { scope =>
+      val delIds = deletedIds.select("id")
+
+      // touched buckets + membership before and after the delete. Probe sets
+      // are kept frames, deleted-member counts derived from the (kept, delete-
+      // proportional) deleted membership — the base index is read once as a
+      // streaming scan, never shuffled (same rationale as attach).
+      val delMembers = Cut.keep("ddx_delMembers")(
+        baseKeyed.join(delIds, Seq("id"), "left_semi"))
+      val touched = Cut.keep("ddx_touched")(delMembers.select("bucket").distinct())
+      val oldT = baseKeyed.join(touched, Seq("bucket"), "left_semi")
+      val newT = Cut.keep("ddx_newT")(oldT.join(delIds, Seq("id"), "left_anti"))
+      val sizes = Cut.keep("ddx_sizes")(newT
+        .groupBy("bucket").agg(count(lit(1)).as("n_new"))
+        .join(touched, Seq("bucket"), "right_outer")
+        .select(col("bucket"), coalesce(col("n_new"), lit(0L)).as("n_new"))
+        .join(delMembers.groupBy("bucket").agg(count(lit(1)).as("n_d")),
+          Seq("bucket"), "left")
+        .select(col("bucket"),
+          (col("n_new") + coalesce(col("n_d"), lit(0L))).as("n_old"),
+          col("n_new")))
+
+      // removed edges: incident to a deleted id (see scaladoc for why this is
+      // the COMPLETE removal set under deletes)
+      val removedL = Cut.keep("ddx_removedL")(baseEdges
+        .join(delIds.withColumnRenamed("id", "id_a"), Seq("id_a"), "left_semi")
+        .unionByName(baseEdges
+          .join(delIds.withColumnRenamed("id", "id_b"), Seq("id_b"), "left_semi")
+          .select("id_a", "id_b"))
+        .distinct())
+
+      // ADDED candidates: stop-key re-entry — remaining pairs of buckets that
+      // dropped back under the cap
+      val reentered = sizes.filter(col("n_old") > maxBucket &&
+        col("n_new") > 1 && col("n_new") <= maxBucket).select("bucket")
+      val reMembers = newT.join(reentered, Seq("bucket"), "left_semi")
+      val addedCand = Cut.keep("ddx_addedCand")(reMembers.as("a")
+        .join(reMembers.as("b"),
+          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct())
+      val addedL = Cut.keep("ddx_addedL")(verify(addedCand)
+        .join(baseEdges.join(addedCand.select("id_a").distinct(),
+          Seq("id_a"), "left_semi"), Seq("id_a", "id_b"), "left_anti"))
+
+      val removedK = removedL.select(keyFn(col("id_a")).as("url_a"),
+        keyFn(col("id_b")).as("url_b"))
+      val addedK = addedL.select(keyFn(col("id_a")).as("url_a"),
+        keyFn(col("id_b")).as("url_b"))
+      val delUrls = delIds.select(keyFn(col("id")).as("url"))
+
+      // dissolve components touched by an edge flip or holding a deleted node;
+      // re-solve without the deleted nodes; keep every other label verbatim
+      val changedUrls = removedK.select(col("url_a").as("url"))
+        .union(removedK.select(col("url_b").as("url")))
+        .union(addedK.select(col("url_a").as("url")))
+        .union(addedK.select(col("url_b").as("url")))
+        .union(delUrls)
+        .distinct()
+      val affectedLabels = Cut.keep("ddx_affectedLabels")(baseAssign
+        .join(changedUrls, Seq("url"), "left_semi")
+        .select("cluster_id").distinct())
+      val memberUrls = Cut.keep("ddx_memberUrls")(baseAssign
+        .join(affectedLabels, Seq("cluster_id"), "left_semi")
+        .select("url"))
+      val subNodes = memberUrls.join(delUrls, Seq("url"), "left_anti")
+      val memberEdges = baseEdges
+        .select(keyFn(col("id_a")).as("url_a"), keyFn(col("id_b")).as("url_b"))
+        .join(memberUrls.withColumnRenamed("url", "url_a"),
+          Seq("url_a"), "left_semi")
+      val subEdges = memberEdges
+        .join(removedK, Seq("url_a", "url_b"), "left_anti")
+        .unionByName(addedK)
+        .withColumn("is_match", lit(true))
+      val resolved = scope.outside(Clustering.clusters(spark, subEdges, subNodes))
+      val assign = Cut.keep("ddx_assign")(baseAssign
+        .join(affectedLabels, Seq("cluster_id"), "left_anti")
+        .select("url", "cluster_id")
+        .unionByName(resolved.select("url", "cluster_id")))
+      Attached(assign, removedL, addedL)
     }
-    val delIds = keep("delIds")(deletedIds.select("id"))
-
-    // touched buckets + membership before and after the delete. Probe sets
-    // broadcast, deleted-member counts derived from the (kept, delete-
-    // proportional) deleted membership — the base index is read once as a
-    // streaming scan, never shuffled (same rationale as attach).
-    val delMembers = keep("delMembers")(baseKeyed.join(broadcast(delIds), Seq("id"), "left_semi"))
-    val touched = keep("touched")(delMembers.select("bucket").distinct())
-    val oldT = baseKeyed.join(broadcast(touched), Seq("bucket"), "left_semi")
-    val newT = keep("newT")(oldT.join(broadcast(delIds), Seq("id"), "left_anti"))
-    val sizes = keep("sizes")(newT.groupBy("bucket").agg(count(lit(1)).as("n_new"))
-      .join(broadcast(touched), Seq("bucket"), "right_outer")
-      .select(col("bucket"), coalesce(col("n_new"), lit(0L)).as("n_new"))
-      .join(delMembers.groupBy("bucket").agg(count(lit(1)).as("n_d")),
-        Seq("bucket"), "left")
-      .select(col("bucket"),
-        (col("n_new") + coalesce(col("n_d"), lit(0L))).as("n_old"),
-        col("n_new")))
-
-    // removed edges: incident to a deleted id (see scaladoc for why this is
-    // the COMPLETE removal set under deletes)
-    val removedL = keep("removedL")(baseEdges
-      .join(broadcast(delIds.withColumnRenamed("id", "id_a")),
-        Seq("id_a"), "left_semi")
-      .unionByName(baseEdges
-        .join(broadcast(delIds.withColumnRenamed("id", "id_b")),
-          Seq("id_b"), "left_semi")
-        .select("id_a", "id_b"))
-      .distinct())
-
-    // ADDED candidates: stop-key re-entry — remaining pairs of buckets that
-    // dropped back under the cap
-    val reentered = sizes.filter(col("n_old") > maxBucket &&
-      col("n_new") > 1 && col("n_new") <= maxBucket).select("bucket")
-    val reMembers = newT.join(broadcast(reentered), Seq("bucket"), "left_semi")
-    val addedCand = keep("addedCand")(reMembers.as("a").join(reMembers.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct())
-    val addedL = keep("addedL")(verify(addedCand)
-      .join(broadcast(baseEdges.join(
-        broadcast(addedCand.select("id_a").distinct()),
-        Seq("id_a"), "left_semi")), Seq("id_a", "id_b"), "left_anti"))
-
-    val removedK = removedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-    val addedK = addedL.select(keyFn(col("id_a")).as("url_a"),
-      keyFn(col("id_b")).as("url_b"))
-    val delUrls = delIds.select(keyFn(col("id")).as("url"))
-
-    // dissolve components touched by an edge flip or holding a deleted node;
-    // re-solve without the deleted nodes; keep every other label verbatim
-    val changedUrls = removedK.select(col("url_a").as("url"))
-      .union(removedK.select(col("url_b").as("url")))
-      .union(addedK.select(col("url_a").as("url")))
-      .union(addedK.select(col("url_b").as("url")))
-      .union(delUrls)
-      .distinct()
-    val affectedLabels = keep("affectedLabels")(baseAssign
-      .join(broadcast(changedUrls), Seq("url"), "left_semi")
-      .select("cluster_id").distinct())
-    val memberUrls = keep("memberUrls")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url"))
-    val subNodes = memberUrls.join(broadcast(delUrls), Seq("url"), "left_anti")
-    val memberEdges = baseEdges
-      .select(keyFn(col("id_a")).as("url_a"), keyFn(col("id_b")).as("url_b"))
-      .join(broadcast(memberUrls.withColumnRenamed("url", "url_a")),
-        Seq("url_a"), "left_semi")
-    val subEdges = memberEdges
-      .join(broadcast(removedK), Seq("url_a", "url_b"), "left_anti")
-      .unionByName(addedK)
-      .withColumn("is_match", lit(true))
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
-    val assign = keep("assign")(baseAssign
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id")))
-    Attached(assign, removedL, addedL)
-  }
 }

@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.chaining._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -46,8 +44,9 @@ import graft.PipelineConfig
   *    contains every final edge incident to it.
   *
   * Scale shape: every shuffle is delta-proportional. Base state is read as
-  * scans with broadcast semi-join pruning (touched keys against s2/s2_overflow,
-  * affected mention ids against s3, affected urls against s4/s5) — at
+  * scans pruned by semi-joins the planner broadcasts (touched keys against
+  * s2/s2_overflow, affected mention ids against s3, affected urls against
+  * s4/s5; each probe set is a Cut with exact stats) — at
   * deployment scale those indexes would be bucketed by key so the scans
   * become partition-pruned reads; nothing here shuffles an O(base) table.
   *
@@ -58,20 +57,6 @@ import graft.PipelineConfig
   * maintenance over the checkpointed stage tables.
   */
 object Incremental {
-
-  /** Small pool for concurrently materializing INDEPENDENT attach
-    * intermediates: Spark's scheduler runs jobs submitted from several
-    * threads side by side (FIFO back-fill), so two plan-cut legs that do not
-    * consume each other overlap instead of serializing — the attach barrier
-    * floor is ~20 eager jobs, and at bench scale each carries 0.2-0.9s of
-    * fixed coordination cost (optimization guide §2.6). */
-  private lazy val attachEc: ExecutionContext =
-    ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(3, r => {
-        val t = new Thread(r, "graft-attach-keep")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Committed base state: the stage tables a full `Pipeline.run` wrote.
     * `blockOverflow` is the rank>cap remainder of hot blocks (stage
@@ -127,407 +112,384 @@ object Incremental {
       /** (url_a, url_b, was_match, now_match) pairs whose decision flipped. */
       changedEdges: DataFrame,
       /** (cluster_id) base labels dissolved and re-solved this attach. */
-      affectedLabels: DataFrame,
-      /** Intermediates are eager local checkpoints (plan-cut leaves); their
-        * blocks are reclaimed by the ContextCleaner when the AttachResult
-        * goes out of scope, so release is a no-op kept for API stability. */
-      release: () => Unit = () => ())
+      affectedLabels: DataFrame)
 
   /** Incrementally resolve `deltaPagesIn` (raw page rows, same schema as the
     * batch input) against `base`. `cfg` must carry the SAME blocking/scoring
     * parameters as the base run — the equality guarantee is per-config. */
   def attach(spark: SparkSession, base: BaseState, deltaPagesIn: DataFrame,
-      dict: DataFrame, cfg: PipelineConfig,
-      /** Print wall + row count per materialized intermediate (dev/ops
-        * decomposition — tools/IncrAB passes true). */
-      verbose: Boolean = false): AttachResult = {
+      dict: DataFrame, cfg: PipelineConfig): AttachResult = {
     require(base.blockOverflow.isDefined,
       "attach requires a base built with keepBlockOverflow=true: exact cap " +
         "re-entry on shrinking hot blocks needs the s2_overflow rows " +
         "(without them the result would silently diverge from a full re-run)")
-    // Eager local checkpoints, NOT persist(): each keep() cuts the LOGICAL
-    // plan to a leaf, not just the execution lineage. The attach algebra
-    // references its intermediates multiply (old-vs-new memberships, UxU
-    // diffs, subgraph assembly), so with persist() the analyzed plan grows
-    // exponentially with stage depth — measured on the portable twin:
-    // analysis time doubling per stage, then a driver analyzer OOM at 800
-    // fixture pages. Base tables stay lazy parquet scans (leaf plans); only
-    // delta-proportional intermediates are materialized. Checkpoint blocks
-    // are reclaimed by the ContextCleaner once the frames go out of scope.
-    // Independent legs materialize CONCURRENTLY (keepF + await): under
-    // verbose the printed walls of concurrent legs overlap.
-    def keep(name: String)(df: DataFrame): DataFrame = {
-      Diag.dumpPlan(s"er_$name", df)
-      if (!verbose) df.localCheckpoint(eager = true)
-      else {
-        val t0 = System.nanoTime()
-        val out = df.localCheckpoint(eager = true)
-        println(f"[attach] $name%-20s ${(System.nanoTime() - t0) / 1e9}%7.2f s " +
-          f"rows=${out.count()}")
-        out
-      }
-    }
-    def keepF(name: String)(df: DataFrame): Future[DataFrame] =
-      Future(keep(name)(df))(attachEc)
-    def await(f: Future[DataFrame]): DataFrame = Await.result(f, Duration.Inf)
+    // Every delta-proportional intermediate is a Cut: a plan-cut leaf with
+    // exact stats. Base tables stay lazy parquet scans (leaf plans). The
+    // algebra plans under the hydration broadcast cap, so the planner
+    // broadcasts each kept probe set and streams the committed table past
+    // it — and shuffles instead once a probe set outgrows the cap.
+    // Independent legs materialize concurrently (keepAsync + await).
+    Cut.withBroadcastCap(spark, cfg.resolvedBroadcastMentionsMaxBytes) { scope =>
+      // ---- s0: merged snapshot winners for urls the delta mentions ----------
+      // deltaUrls and the merged-winner window are independent given the raw
+      // delta (both derive the url set inline) — one overlapped barrier
+      val deltaCanon = Extract.canonicalized(deltaPagesIn)
+      val deltaUrlsF = Cut.keepAsync("er_deltaUrls")(deltaCanon.select("url").distinct())
+      val mergedTouchedPagesF = Cut.keepAsync("er_mergedTouchedPages")(
+        Extract.withInvariant(Extract.latestSnapshot(
+          base.pages.drop("invariant_ok")
+            .join(deltaCanon.select("url").distinct(), Seq("url"), "left_semi")
+            .unionByName(deltaCanon))))
+      val deltaUrls = Cut.await(deltaUrlsF)
+      val mergedTouchedPages = Cut.await(mergedTouchedPagesF)
 
-    // ---- s0: merged snapshot winners for urls the delta mentions ----------
-    // deltaUrls and the merged-winner window are independent given the raw
-    // delta (both derive the url set inline) — one overlapped barrier
-    val deltaCanon = Extract.canonicalized(deltaPagesIn)
-    val deltaUrlsF = keepF("deltaUrls")(deltaCanon.select("url").distinct())
-    val mergedTouchedPagesF = keepF("mergedTouchedPages")(
-      Extract.withInvariant(Extract.latestSnapshot(
-        base.pages.drop("invariant_ok")
-          .join(broadcast(deltaCanon.select("url").distinct()), Seq("url"), "left_semi")
-          .unionByName(deltaCanon))))
-    val deltaUrls = await(deltaUrlsF)
-    val mergedTouchedPages = await(mergedTouchedPagesF)
+      // dirty = new url, or an existing url whose winning snapshot changed
+      // (html hash is the identity that matters: extraction, mentions and
+      // blocking are deterministic in the html payload)
+      val baseWinner = base.pages
+        .join(deltaUrls, Seq("url"), "left_semi")
+        .select(col("url"), xxhash64(col("html")).as("h0"))
+      val dirtyUrls = mergedTouchedPages
+        .select(col("url"), xxhash64(col("html")).as("h1"))
+        .join(baseWinner, Seq("url"), "left_outer")
+        .filter(col("h0").isNull || col("h0") =!= col("h1"))
+        .select("url")
+        .pipe(Cut.keep("er_dirtyUrls"))
 
-    // dirty = new url, or an existing url whose winning snapshot changed
-    // (html hash is the identity that matters: extraction, mentions and
-    // blocking are deterministic in the html payload)
-    val baseWinner = base.pages
-      .join(broadcast(deltaUrls), Seq("url"), "left_semi")
-      .select(col("url"), xxhash64(col("html")).as("h0"))
-    val dirtyUrls = mergedTouchedPages
-      .select(col("url"), xxhash64(col("html")).as("h1"))
-      .join(broadcast(baseWinner), Seq("url"), "left_outer")
-      .filter(col("h0").isNull || col("h0") =!= col("h1"))
-      .select("url")
-      .pipe(keep("dirtyUrls"))
+      // ---- s1: mentions of dirty urls, old and new --------------------------
+      val dirtyPages = mergedTouchedPages.join(dirtyUrls, Seq("url"), "left_semi")
+      val oldDirtyMentions = base.mentions.join(dirtyUrls, Seq("url"), "left_semi")
 
-    // ---- s1: mentions of dirty urls, old and new --------------------------
-    val dirtyPages = mergedTouchedPages.join(broadcast(dirtyUrls), Seq("url"), "left_semi")
-    val oldDirtyMentions = base.mentions.join(broadcast(dirtyUrls), Seq("url"), "left_semi")
+      // ---- s2: touched blocks -----------------------------------------------
+      // every block key a dirty mention enters (new membership) or leaves (old
+      // membership) — block keys are deterministic in mention content, so no
+      // other block's membership can differ from the base run's. The OLD-side
+      // key set (a scan of base mentions) materializes concurrently with the
+      // new-side extract -> block chain.
+      val oldDirtyKeysF = Cut.keepAsync("er_oldDirtyKeys")(
+        Blocking.allBlocks(oldDirtyMentions, dict, cfg.seed)
+          .select("block_key").distinct())
+      val newDirtyMentions = Cut.keep("er_newDirtyMentions")(
+        Extract.mentions(dirtyPages, cfg.ctxWindow))
+      val newDirtyBlocks = Cut.keep("er_newDirtyBlocks")(
+        Blocking.allBlocks(newDirtyMentions, dict, cfg.seed))
+      val touchedKeys = newDirtyBlocks.select("block_key")
+        .union(Cut.await(oldDirtyKeysF))
+        .distinct()
+        .pipe(Cut.keep("er_touchedKeys"))
 
-    // ---- s2: touched blocks -----------------------------------------------
-    // every block key a dirty mention enters (new membership) or leaves (old
-    // membership) — block keys are deterministic in mention content, so no
-    // other block's membership can differ from the base run's. The OLD-side
-    // key set (a scan of base mentions) materializes concurrently with the
-    // new-side extract -> block chain.
-    val oldDirtyKeysF = keepF("oldDirtyKeys")(
-      Blocking.allBlocks(oldDirtyMentions, dict, cfg.seed)
-        .select("block_key").distinct())
-    val newDirtyMentions = keep("newDirtyMentions")(Extract.mentions(dirtyPages, cfg.ctxWindow))
-    val newDirtyBlocks = keep("newDirtyBlocks")(Blocking.allBlocks(newDirtyMentions, dict, cfg.seed))
-    val touchedKeys = newDirtyBlocks.select("block_key")
-      .union(await(oldDirtyKeysF))
-      .distinct()
-      .pipe(keep("touchedKeys"))
+      // raw (uncapped) base membership of touched blocks: capped rows plus the
+      // committed overflow, so cap re-entry on shrinking blocks is exact
+      val baseRawTouched = base.blocks.select("block_key", "mention_id", "url")
+        .unionByName(base.blockOverflow.get.select("block_key", "mention_id", "url"))
+        .join(touchedKeys, Seq("block_key"), "left_semi")
 
-    // raw (uncapped) base membership of touched blocks: capped rows plus the
-    // committed overflow, so cap re-entry on shrinking blocks is exact
-    val baseRawTouched = base.blocks.select("block_key", "mention_id", "url")
-      .unionByName(base.blockOverflow.get.select("block_key", "mention_id", "url"))
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_semi")
+      // merged membership: base minus ALL dirty urls' old mentions, plus dirty
+      // new mentions; the content-hash rank cap then reproduces the batch cap.
+      // The old-membership scan (oldTouchedBlocks) is independent of the
+      // merge+recap chain — overlapped.
+      val oldTouchedBlocksF = Cut.keepAsync("er_oldTouchedBlocks")(base.blocks
+        .join(touchedKeys, Seq("block_key"), "left_semi")
+        .select(col("block_key"), col("mention_id"), col("url"),
+          xxhash64(col("block_key")).as("block_id")))
+      val mergedRawTouched = baseRawTouched
+        .join(dirtyUrls, Seq("url"), "left_anti")
+        .unionByName(newDirtyBlocks.select("block_key", "mention_id", "url"))
+        .pipe(Cut.keep("er_mergedRawTouched"))
+      val newTouchedBlocks = Cut.keep("er_newTouchedBlocks")(
+        Blocking.capBlocks(mergedRawTouched, cfg.maxBlock)
+          .withColumn("block_id", xxhash64(col("block_key"))))
+      // materialized once: consumed by the leaver/entrant diff, the co-member
+      // expansion and the old-contribution join — without the cut each
+      // consumer re-scans the full s2_blocks table
+      val oldTouchedBlocks = Cut.await(oldTouchedBlocksF)
 
-    // merged membership: base minus ALL dirty urls' old mentions, plus dirty
-    // new mentions; the content-hash rank cap then reproduces the batch cap.
-    // The old-membership scan (oldTouchedBlocks) is independent of the
-    // merge+recap chain — overlapped.
-    val oldTouchedBlocksF = keepF("oldTouchedBlocks")(base.blocks
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_semi")
-      .select(col("block_key"), col("mention_id"), col("url"),
-        xxhash64(col("block_key")).as("block_id")))
-    val mergedRawTouched = baseRawTouched
-      .join(broadcast(dirtyUrls), Seq("url"), "left_anti")
-      .unionByName(newDirtyBlocks.select("block_key", "mention_id", "url"))
-      .pipe(keep("mergedRawTouched"))
-    val newTouchedBlocks = keep("newTouchedBlocks")(Blocking.capBlocks(mergedRawTouched, cfg.maxBlock)
-      .withColumn("block_id", xxhash64(col("block_key"))))
-    // materialized once: consumed by the leaver/entrant diff, the co-member
-    // expansion and the old-contribution join — without the checkpoint each
-    // consumer re-scans the full s2_blocks table
-    val oldTouchedBlocks = await(oldTouchedBlocksF)
+      // ---- s3: mention pairs whose candidate set can have changed -----------
+      // NEVER regenerate a touched block's full O(n²) pair set (one dirty
+      // mention in a cap-sized block would force ~cap²/2 rows, twice — at 200k
+      // pages that was 43M regenerated rows for a 224k-pair rescore). Instead
+      // diff the CAPPED MEMBERSHIP per touched block — O(members) rows:
+      //  - leavers:  in the base cap, not in the recomputed cap (dirty mention
+      //    removed, or pushed out by an entrant under the content-hash rank);
+      //  - entrants: in the recomputed cap, not in the base cap (new dirty
+      //    mention, or cap re-entry from the s2_overflow rows);
+      //  - dirty members: same (block, mention_id) on both sides but the url
+      //    is dirty — the mention PAYLOAD (ctx) may differ even when the
+      //    membership and ids do not.
+      // A mention pair's decision inputs changed iff one endpoint is in this
+      // delta set D for a block they co-occupy (generation gained/lost there,
+      // or the min-block-id tiebreak moved, or a payload changed); everything
+      // else regenerates bit-identically and is NOT rescored. Changed pairs =
+      // D × co-members — Σ|D_b|·|members_b|, delta-proportional.
+      // id-keyed projections: the diff and every generation join below key on
+      // the numeric block_id (the id the committed s3 rows carry and the batch
+      // self-join pairs on) — band-key strings never enter these shuffles
+      val oldCapM = oldTouchedBlocks
+        .select("block_id", "mention_id", "url")
+      val newCapM = newTouchedBlocks
+        .select("block_id", "mention_id", "url")
+      val leavers = oldCapM.join(newCapM.select("block_id", "mention_id"),
+        Seq("block_id", "mention_id"), "left_anti")
+      val entrants = newCapM.join(oldCapM.select("block_id", "mention_id"),
+        Seq("block_id", "mention_id"), "left_anti")
+      val dirtyMembers = newCapM.join(dirtyUrls, Seq("url"), "left_semi")
+      // single consumer (mpRaw) over already-kept inputs: no barrier of its own
+      val dMembers = leavers.unionByName(entrants)
+        .unionByName(dirtyMembers)
 
-    // ---- s3: mention pairs whose candidate set can have changed -----------
-    // NEVER regenerate a touched block's full O(n²) pair set (one dirty
-    // mention in a cap-sized block would force ~cap²/2 rows, twice — at 200k
-    // pages that was 43M regenerated rows for a 224k-pair rescore). Instead
-    // diff the CAPPED MEMBERSHIP per touched block — O(members) rows:
-    //  - leavers:  in the base cap, not in the recomputed cap (dirty mention
-    //    removed, or pushed out by an entrant under the content-hash rank);
-    //  - entrants: in the recomputed cap, not in the base cap (new dirty
-    //    mention, or cap re-entry from the s2_overflow rows);
-    //  - dirty members: same (block, mention_id) on both sides but the url
-    //    is dirty — the mention PAYLOAD (ctx) may differ even when the
-    //    membership and ids do not.
-    // A mention pair's decision inputs changed iff one endpoint is in this
-    // delta set D for a block they co-occupy (generation gained/lost there,
-    // or the min-block-id tiebreak moved, or a payload changed); everything
-    // else regenerates bit-identically and is NOT rescored. Changed pairs =
-    // D × co-members — Σ|D_b|·|members_b|, delta-proportional.
-    // id-keyed projections: the diff and every generation join below key on
-    // the numeric block_id (the id the committed s3 rows carry and the batch
-    // self-join pairs on) — band-key strings never enter these shuffles
-    val oldCapM = oldTouchedBlocks
-      .select("block_id", "mention_id", "url")
-    val newCapM = newTouchedBlocks
-      .select("block_id", "mention_id", "url")
-    val leavers = oldCapM.join(broadcast(newCapM.select("block_id", "mention_id")),
-      Seq("block_id", "mention_id"), "left_anti")
-    val entrants = newCapM.join(broadcast(oldCapM.select("block_id", "mention_id")),
-      Seq("block_id", "mention_id"), "left_anti")
-    val dirtyMembers = newCapM.join(broadcast(dirtyUrls), Seq("url"), "left_semi")
-    // single consumer (mpRaw) over already-kept inputs: no barrier of its own
-    val dMembers = leavers.unionByName(entrants)
-      .unionByName(dirtyMembers)
-
-    // candidate mention pairs POSSIBLY changed (D × co-members within a
-    // shared touched block), oriented like production pair-gen (url_a<url_b).
-    // Joined on the NUMERIC block_id, exactly like the production pair self-
-    // join (Blocking.candidatePairs keys on block_id, not block_key): narrow
-    // long keys instead of band-key strings through the expansion shuffle.
-    // no distinct here: mpRaw dedups its own output, and duplicate membership
-    // rows (present in both caps) cannot change the pair set — saves a shuffle
-    val coMembers = oldCapM.unionByName(newCapM)
-    val mpRaw = keep("mpRaw")(broadcast(dMembers
-      .select(col("block_id"), col("mention_id").as("mid_d"),
-        col("url").as("url_d")))
-      .join(coMembers.select(col("block_id"), col("mention_id").as("mid_o"),
-        col("url").as("url_o")), Seq("block_id"))
-      .filter(col("url_d") =!= col("url_o"))
-      .select(
-        when(col("url_d") < col("url_o"), col("mid_d")).otherwise(col("mid_o"))
-          .as("mid_a"),
-        when(col("url_d") < col("url_o"), col("mid_o")).otherwise(col("mid_d"))
-          .as("mid_b"),
-        least(col("url_d"), col("url_o")).as("url_a"),
-        greatest(col("url_d"), col("url_o")).as("url_b"))
-      .distinct())
-    val mpKeys = mpRaw.select("mid_a", "mid_b")
-
-    // per-pair min generating block id from each source, restricted to the
-    // candidate pairs — every join here is delta-proportional:
-    //  - tb_old / tb_new: touched blocks under old/new capped membership,
-    //    computed in ONE fused pass (src tag in the join key + conditional
-    //    min aggregates) instead of two separate coGen join pairs;
-    //  - tb_unt: untouched blocks (membership unchanged — base.blocks minus
-    //    touched) of the candidate pairs' mentions.
-    // All generation joins key on block_id — the id the committed s3 rows
-    // carry and the batch self-join pairs on.
-    val midsChanged = mpKeys.select(col("mid_a").as("mention_id"))
-      .union(mpKeys.select(col("mid_b").as("mention_id"))).distinct()
-    val blocksOfChangedF = keepF("blocksOfChanged")(base.blocks
-      .join(broadcast(midsChanged), Seq("mention_id"), "left_semi")
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
-      .select(col("mention_id"), xxhash64(col("block_key")).as("block_id")))
-    def coGen(members: DataFrame, out: String) = broadcast(mpKeys)
-      .join(members.select(col("mention_id").as("mid_a"), col("block_id")),
-        Seq("mid_a"))
-      .join(broadcast(members.select(col("mention_id").as("mid_b"),
-        col("block_id"))), Seq("mid_b", "block_id"))
-      .groupBy("mid_a", "mid_b")
-      .agg(min(col("block_id")).as(out))
-    // fused tb_old/tb_new: a pair is generated by a source iff both endpoints
-    // share a block IN THAT SOURCE — src rides the join key, so the fused
-    // join equals coGen(oldCapM) ⟗ coGen(newCapM) with half the joins. The
-    // pair-key set is delta-proportional and id-only: broadcast it so the
-    // membership table streams through two hash joins unshuffled.
-    val tbON = {
-      val both = oldCapM.withColumn("src", lit(0))
-        .unionByName(newCapM.withColumn("src", lit(1)))
-      broadcast(mpKeys)
-        .join(both.select(col("mention_id").as("mid_a"), col("block_id"),
-          col("src")), Seq("mid_a"))
-        .join(broadcast(both.select(col("mention_id").as("mid_b"),
-          col("block_id"), col("src"))), Seq("mid_b", "block_id", "src"))
-        .groupBy("mid_a", "mid_b")
-        .agg(min(when(col("src") === 0, col("block_id"))).as("tb_old"),
-          min(when(col("src") === 1, col("block_id"))).as("tb_new"))
-    }.pipe(keep("tbON"))
-    val blocksOfChanged = await(blocksOfChangedF)
-    val tbUnt = coGen(blocksOfChanged, "tb_unt")
-
-    // TRULY changed pairs: touched contribution differs (generation gained/
-    // lost there, or the min-block-id tiebreak moved), or an endpoint url is
-    // dirty (payload may differ even with identical membership and ids).
-    // Pairs with identical touched contribution and clean payloads
-    // regenerate bit-identically and are NOT rescored.
-    val dirtyIncident = mpRaw
-      .join(broadcast(dirtyUrls.withColumnRenamed("url", "url_a")), Seq("url_a"), "left_semi")
-      .unionByName(mpRaw.join(broadcast(dirtyUrls.withColumnRenamed("url", "url_b")),
-        Seq("url_b"), "left_semi"))
-    val mpP = keep("mpP")(mpRaw
-      .join(broadcast(tbON), Seq("mid_a", "mid_b"), "left")
-      .filter(!(col("tb_old") <=> col("tb_new")))
-      .select("mid_a", "mid_b", "url_a", "url_b")
-      .unionByName(dirtyIncident)
-      .distinct())
-
-    // the rescore unit is the URL pair (best mention pair over its full
-    // candidate set): one changed mention-level candidate rescores the pair
-    // pairsP and affectedUrls both derive from the kept mpP — one
-    // overlapped barrier instead of two serial ones
-    val pairsPF = keepF("pairsP")(mpP.select("url_a", "url_b").distinct())
-    val affectedUrlsF = keepF("affectedUrls")(
-      mpP.select(col("url_a").as("url"))
-        .union(mpP.select(col("url_b").as("url")))
-        .union(dirtyUrls.select("url"))
+      // candidate mention pairs POSSIBLY changed (D × co-members within a
+      // shared touched block), oriented like production pair-gen (url_a<url_b).
+      // Joined on the NUMERIC block_id, exactly like the production pair self-
+      // join (Blocking.candidatePairs keys on block_id, not block_key): narrow
+      // long keys instead of band-key strings through the expansion shuffle.
+      // no distinct here: mpRaw dedups its own output, and duplicate membership
+      // rows (present in both caps) cannot change the pair set — saves a shuffle
+      val coMembers = oldCapM.unionByName(newCapM)
+      val mpRaw = Cut.keep("er_mpRaw")(dMembers
+        .select(col("block_id"), col("mention_id").as("mid_d"),
+          col("url").as("url_d"))
+        .join(coMembers.select(col("block_id"), col("mention_id").as("mid_o"),
+          col("url").as("url_o")), Seq("block_id"))
+        .filter(col("url_d") =!= col("url_o"))
+        .select(
+          when(col("url_d") < col("url_o"), col("mid_d")).otherwise(col("mid_o"))
+            .as("mid_a"),
+          when(col("url_d") < col("url_o"), col("mid_o")).otherwise(col("mid_d"))
+            .as("mid_b"),
+          least(col("url_d"), col("url_o")).as("url_a"),
+          greatest(col("url_d"), col("url_o")).as("url_b"))
         .distinct())
-    val pairsP = await(pairsPF)
-    val affectedUrls = await(affectedUrlsF)
+      val mpKeys = mpRaw.select("mid_a", "mid_b")
 
-    // base mention ids of affected urls (the pruning key into s3) and the
-    // merged mentions view (the s4 hydration payload) are independent given
-    // affectedUrls — the s3P chain and mentionsU materialize concurrently
-    // the hydration byte estimate rides mentionsU's materialization as an
-    // observe() metric — no extra estimation job (same trick as CC's
-    // convergence checksums)
-    val mentionsUObs = org.apache.spark.sql.Observation()
-    def oct(c: String) = coalesce(octet_length(col(c)).cast("long"), lit(0L))
-    val mentionsUF = keepF("mentionsU")(base.mentions
-      .join(broadcast(dirtyUrls), Seq("url"), "left_anti")
-      .join(broadcast(affectedUrls), Seq("url"), "left_semi")
-      .unionByName(newDirtyMentions)
-      .observe(mentionsUObs, coalesce(sum(
-        oct("surface") + oct("ctx") + oct("url") + lit(24L)),
-        lit(0L)).as("bytes")))
-    val midsU = keep("midsU")(base.mentions.join(broadcast(affectedUrls), Seq("url"), "left_semi")
-      .select(col("mention_id"), col("url")))
-    // committed candidates of P's url pairs, with their committed min
-    // generating block id
-    val s3P = base.pairs
-      .join(broadcast(midsU.select(col("mention_id").as("mid_a"), col("url").as("url_a"))),
-        Seq("mid_a"))
-      .join(broadcast(midsU.select(col("mention_id").as("mid_b"), col("url").as("url_b"))),
-        Seq("mid_b"))
-      .join(broadcast(pairsP), Seq("url_a", "url_b"), "left_semi")
-      .select("mid_a", "mid_b", "block_id")
-      .pipe(keep("s3P"))
+      // per-pair min generating block id from each source, restricted to the
+      // candidate pairs — every join here is delta-proportional:
+      //  - tb_old / tb_new: touched blocks under old/new capped membership,
+      //    computed in ONE fused pass (src tag in the join key + conditional
+      //    min aggregates) instead of two separate coGen join pairs;
+      //  - tb_unt: untouched blocks (membership unchanged — base.blocks minus
+      //    touched) of the candidate pairs' mentions.
+      // All generation joins key on block_id — the id the committed s3 rows
+      // carry and the batch self-join pairs on.
+      val midsChanged = mpKeys.select(col("mid_a").as("mention_id"))
+        .union(mpKeys.select(col("mid_b").as("mention_id"))).distinct()
+      val blocksOfChangedF = Cut.keepAsync("er_blocksOfChanged")(base.blocks
+        .join(midsChanged, Seq("mention_id"), "left_semi")
+        .join(touchedKeys, Seq("block_key"), "left_anti")
+        .select(col("mention_id"), xxhash64(col("block_key")).as("block_id")))
+      def coGen(members: DataFrame, out: String) = mpKeys
+        .join(members.select(col("mention_id").as("mid_a"), col("block_id")),
+          Seq("mid_a"))
+        .join(members.select(col("mention_id").as("mid_b"), col("block_id")),
+          Seq("mid_b", "block_id"))
+        .groupBy("mid_a", "mid_b")
+        .agg(min(col("block_id")).as(out))
+      // fused tb_old/tb_new: a pair is generated by a source iff both endpoints
+      // share a block IN THAT SOURCE — src rides the join key, so the fused
+      // join equals coGen(oldCapM) ⟗ coGen(newCapM) with half the joins. The
+      // pair-key set and the memberships are kept, delta-proportional frames:
+      // the planner hashes them, no membership table is shuffled.
+      val tbON = {
+        val both = oldCapM.withColumn("src", lit(0))
+          .unionByName(newCapM.withColumn("src", lit(1)))
+        mpKeys
+          .join(both.select(col("mention_id").as("mid_a"), col("block_id"),
+            col("src")), Seq("mid_a"))
+          .join(both.select(col("mention_id").as("mid_b"),
+            col("block_id"), col("src")), Seq("mid_b", "block_id", "src"))
+          .groupBy("mid_a", "mid_b")
+          .agg(min(when(col("src") === 0, col("block_id"))).as("tb_old"),
+            min(when(col("src") === 1, col("block_id"))).as("tb_new"))
+      }.pipe(Cut.keep("er_tbON"))
+      val blocksOfChanged = Cut.await(blocksOfChangedF)
+      val tbUnt = coGen(blocksOfChanged, "tb_unt")
 
-    // STABLE mention pairs of P's url pairs — not in the changed set, so
-    // their generation AND min block id are bit-identical to the committed
-    // row (both endpoints stable in every touched block they share, payloads
-    // clean): reuse base.pairs verbatim, no regeneration
-    val mpPKeys = mpP.select("mid_a", "mid_b")
-    val stableCands = s3P.join(broadcast(mpPKeys), Seq("mid_a", "mid_b"), "left_anti")
+      // TRULY changed pairs: touched contribution differs (generation gained/
+      // lost there, or the min-block-id tiebreak moved), or an endpoint url is
+      // dirty (payload may differ even with identical membership and ids).
+      // Pairs with identical touched contribution and clean payloads
+      // regenerate bit-identically and are NOT rescored.
+      val dirtyIncident = mpRaw
+        .join(dirtyUrls.withColumnRenamed("url", "url_a"), Seq("url_a"), "left_semi")
+        .unionByName(mpRaw.join(dirtyUrls.withColumnRenamed("url", "url_b"),
+          Seq("url_b"), "left_semi"))
+      val mpP = Cut.keep("er_mpP")(mpRaw
+        .join(tbON, Seq("mid_a", "mid_b"), "left")
+        .filter(!(col("tb_old") <=> col("tb_new")))
+        .select("mid_a", "mid_b", "url_a", "url_b")
+        .unionByName(dirtyIncident)
+        .distinct())
 
-    // CHANGED pairs: new min block id = min(new touched, untouched)
-    // contribution; generated by neither source → EVICTED (absent from the
-    // rescore input, so its url pair drops out of the merged scored table
-    // unless other candidates remain)
-    val changedCands = mpPKeys
-      .join(broadcast(tbON.select("mid_a", "mid_b", "tb_new")), Seq("mid_a", "mid_b"), "left")
-      .join(tbUnt, Seq("mid_a", "mid_b"), "left")
-      .select(col("mid_a"), col("mid_b"),
-        least(col("tb_new"), col("tb_unt")).as("block_id"))
-      .filter(col("block_id").isNotNull)
+      // the rescore unit is the URL pair (best mention pair over its full
+      // candidate set): one changed mention-level candidate rescores the pair
+      // pairsP and affectedUrls both derive from the kept mpP — one
+      // overlapped barrier instead of two serial ones
+      val pairsPF = Cut.keepAsync("er_pairsP")(mpP.select("url_a", "url_b").distinct())
+      val affectedUrlsF = Cut.keepAsync("er_affectedUrls")(
+        mpP.select(col("url_a").as("url"))
+          .union(mpP.select(col("url_b").as("url")))
+          .union(dirtyUrls.select("url"))
+          .distinct())
+      val pairsP = Cut.await(pairsPF)
+      val affectedUrls = Cut.await(affectedUrlsF)
 
-    // full new candidate set for the P pairs
-    val newCandsP = stableCands.unionByName(changedCands)
+      // base mention ids of affected urls (the pruning key into s3) and the
+      // merged mentions view (the s4 hydration payload) are independent given
+      // affectedUrls — the s3P chain and mentionsU materialize concurrently
+      val mentionsUF = Cut.keepAsync("er_mentionsU")(base.mentions
+        .join(dirtyUrls, Seq("url"), "left_anti")
+        .join(affectedUrls, Seq("url"), "left_semi")
+        .unionByName(newDirtyMentions))
+      val midsU = Cut.keep("er_midsU")(base.mentions
+        .join(affectedUrls, Seq("url"), "left_semi")
+        .select(col("mention_id"), col("url")))
+      // committed candidates of P's url pairs, with their committed min
+      // generating block id
+      val s3P = base.pairs
+        .join(midsU.select(col("mention_id").as("mid_a"), col("url").as("url_a")),
+          Seq("mid_a"))
+        .join(midsU.select(col("mention_id").as("mid_b"), col("url").as("url_b")),
+          Seq("mid_b"))
+        .join(pairsP, Seq("url_a", "url_b"), "left_semi")
+        .select("mid_a", "mid_b", "block_id")
+        .pipe(Cut.keep("er_s3P"))
 
-    // ---- s4: rescore the P pairs over their full candidate sets -----------
-    // merged mentions view restricted to P's urls (hydration payload is
-    // delta-proportional)
-    val mentionsU = await(mentionsUF)
-    // hydration strategy: same byte-sized auto-gate as the batch path
-    // (round-5 advice — the old unconditional broadcast could exceed the
-    // 8 GiB broadcast cap on a dense P set where the batch run would have
-    // chosen shuffle hydration); the estimate was observed during the
-    // mentionsU materialization above
-    val bcastHydrate = cfg.broadcastMentions.getOrElse {
-      val bytes = mentionsUObs.get("bytes").asInstanceOf[Long]
-      bytes <= cfg.resolvedBroadcastMentionsMaxBytes
+      // STABLE mention pairs of P's url pairs — not in the changed set, so
+      // their generation AND min block id are bit-identical to the committed
+      // row (both endpoints stable in every touched block they share, payloads
+      // clean): reuse base.pairs verbatim, no regeneration
+      val mpPKeys = mpP.select("mid_a", "mid_b")
+      val stableCands = s3P.join(mpPKeys, Seq("mid_a", "mid_b"), "left_anti")
+
+      // CHANGED pairs: new min block id = min(new touched, untouched)
+      // contribution; generated by neither source → EVICTED (absent from the
+      // rescore input, so its url pair drops out of the merged scored table
+      // unless other candidates remain)
+      val changedCands = mpPKeys
+        .join(tbON.select("mid_a", "mid_b", "tb_new"), Seq("mid_a", "mid_b"), "left")
+        .join(tbUnt, Seq("mid_a", "mid_b"), "left")
+        .select(col("mid_a"), col("mid_b"),
+          least(col("tb_new"), col("tb_unt")).as("block_id"))
+        .filter(col("block_id").isNotNull)
+
+      // full new candidate set for the P pairs
+      val newCandsP = stableCands.unionByName(changedCands)
+
+      // ---- s4: rescore the P pairs over their full candidate sets -----------
+      // merged mentions view restricted to P's urls (hydration payload is
+      // delta-proportional)
+      val mentionsU = Cut.await(mentionsUF)
+      // hydration strategy: same byte-sized auto-gate as the batch path
+      // (round-5 advice — the old unconditional broadcast could exceed the
+      // 8 GiB broadcast cap on a dense P set where the batch run would have
+      // chosen shuffle hydration), read off the kept frame's recorded bytes
+      val bcastHydrate = cfg.broadcastMentions.getOrElse(
+        Cut.bytes(mentionsU) <= cfg.resolvedBroadcastMentionsMaxBytes)
+      val rescored = Scoring.score(newCandsP, mentionsU, cfg.weights,
+        cfg.embedDim, cfg.seed, broadcastMentions = bcastHydrate)
+        .pipe(Cut.keep("er_rescored"))
+
+      // merged scored view: base rows for url pairs outside P are reused
+      // verbatim (their candidate sets and payloads cannot have changed)
+      val scoredMerged = base.scored
+        // merged view, planned by the caller after the cap scope: hinted
+        .join(broadcast(pairsP), Seq("url_a", "url_b"), "left_anti")
+        .unionByName(rescored)
+
+      // ---- s5: delta-local cluster maintenance ------------------------------
+      val oldEdgesUU = base.scored.filter(col("is_match"))
+        .join(pairsP, Seq("url_a", "url_b"), "left_semi")
+        .select("url_a", "url_b")
+      val newEdgesUU = rescored.filter(col("is_match")).select("url_a", "url_b")
+      val changedEdges = oldEdgesUU.withColumn("was_match", lit(true))
+        .join(newEdgesUU.withColumn("now_match", lit(true)),
+          Seq("url_a", "url_b"), "full_outer")
+        .withColumn("was_match", coalesce(col("was_match"), lit(false)))
+        .withColumn("now_match", coalesce(col("now_match"), lit(false)))
+        .filter(col("was_match") =!= col("now_match"))
+        .pipe(Cut.keep("er_changedEdges"))
+
+      // labels to dissolve: components an added/removed edge touches, plus the
+      // labels of every dirty url (a dirty url's validity or membership can
+      // change even with no edge flips)
+      val changedUrls = changedEdges.select(col("url_a").as("url"))
+        .union(changedEdges.select(col("url_b").as("url")))
+        .union(dirtyUrls.select("url"))
+        .distinct()
+      val affectedLabels = base.clusters
+        .join(changedUrls, Seq("url"), "left_semi")
+        .select(col("cluster_id")).distinct()
+        .pipe(Cut.keep("er_affectedLabels"))
+
+      // re-solve subgraph: all members of dissolved labels plus dirty urls that
+      // are valid nodes under their merged winner; edges = base edges among
+      // members (components are edge-closed, so a member edge cannot leave the
+      // member set) minus removed flips plus added flips
+      val memberUrls = base.clusters
+        .join(affectedLabels, Seq("cluster_id"), "left_semi")
+        .select("url")
+      val dirtyValidNodes = mergedTouchedPages
+        .join(dirtyUrls, Seq("url"), "left_semi")
+        .filter(col("lang") === "en" && col("invariant_ok"))
+        .select("url")
+      val subNodes = memberUrls.join(dirtyUrls, Seq("url"), "left_anti")
+        .union(dirtyValidNodes).distinct()
+      val memberEdges = base.scored.filter(col("is_match"))
+        .join(memberUrls.withColumnRenamed("url", "url_a"), Seq("url_a"), "left_semi")
+        .select("url_a", "url_b")
+      val removed = changedEdges.filter(col("was_match")).select("url_a", "url_b")
+      val added = changedEdges.filter(col("now_match")).select("url_a", "url_b")
+      val subEdges = memberEdges
+        .join(removed, Seq("url_a", "url_b"), "left_anti")
+        .unionByName(added)
+        .withColumn("is_match", lit(true))
+
+      val resolved = scope.outside(Clustering.clusters(spark, subEdges, subNodes))
+
+      val clustersMerged = base.clusters
+        // merged view, planned by the caller after the cap scope: hinted
+        .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
+        .select("url", "cluster_id")
+        .unionByName(resolved.select("url", "cluster_id"))
+
+      // merged s0/s1 views for chaining (caller may checkpoint as a new base).
+      // pages swaps in the recomputed winner for EVERY delta url (not just
+      // dirty ones): a content-identical re-send with a later warc_ts is a
+      // semantic no-op but the batch s0 carries the later row, and the merged
+      // view must match it byte-for-byte
+      val pagesMerged = base.pages
+        // merged view, planned by the caller after the cap scope: hinted
+        .join(broadcast(deltaUrls), Seq("url"), "left_anti")
+        .unionByName(mergedTouchedPages)
+      val mentionsMerged = base.mentions
+        // merged view, planned by the caller after the cap scope: hinted
+        .join(broadcast(dirtyUrls), Seq("url"), "left_anti")
+        .unionByName(newDirtyMentions)
+
+      // merged s2/s2_overflow/s3 for chaining: untouched rows verbatim;
+      // touched blocks get the recomputed cap (newTouchedBlocks IS the batch
+      // cap over the merged raw membership) and its rank>cap remainder;
+      // changed pairs get their recomputed min generating block id
+      val baseCols = base.blocks.columns.toSeq
+      val blocksMerged = base.blocks
+        // merged view, planned by the caller after the cap scope: hinted
+        .join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
+        .unionByName(newTouchedBlocks.select(baseCols.head, baseCols.tail: _*))
+      val overflowMerged = base.blockOverflow.map { o =>
+        // merged view, planned by the caller after the cap scope: hinted
+        o.join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
+          .unionByName(
+            Blocking.capBlocksOverflow(mergedRawTouched, cfg.maxBlock)
+              .select(o.columns.head, o.columns.tail: _*))
+      }
+      val pairsMerged = base.pairs
+        // merged view, planned by the caller after the cap scope: hinted
+        .join(broadcast(mpPKeys), Seq("mid_a", "mid_b"), "left_anti")
+        .unionByName(changedCands)
+
+      AttachResult(clustersMerged, scoredMerged, mentionsMerged, pagesMerged,
+        blocksMerged, overflowMerged, pairsMerged,
+        dirtyUrls, touchedKeys, rescored, changedEdges, affectedLabels)
     }
-    val rescored = Scoring.score(newCandsP, mentionsU, cfg.weights,
-      cfg.embedDim, cfg.seed, broadcastMentions = bcastHydrate)
-      .pipe(keep("rescored"))
-
-    // merged scored view: base rows for url pairs outside P are reused
-    // verbatim (their candidate sets and payloads cannot have changed)
-    val scoredMerged = base.scored
-      .join(broadcast(pairsP), Seq("url_a", "url_b"), "left_anti")
-      .unionByName(rescored)
-
-    // ---- s5: delta-local cluster maintenance ------------------------------
-    val oldEdgesUU = base.scored.filter(col("is_match"))
-      .join(broadcast(pairsP), Seq("url_a", "url_b"), "left_semi")
-      .select("url_a", "url_b")
-    val newEdgesUU = rescored.filter(col("is_match")).select("url_a", "url_b")
-    val changedEdges = oldEdgesUU.withColumn("was_match", lit(true))
-      .join(newEdgesUU.withColumn("now_match", lit(true)),
-        Seq("url_a", "url_b"), "full_outer")
-      .withColumn("was_match", coalesce(col("was_match"), lit(false)))
-      .withColumn("now_match", coalesce(col("now_match"), lit(false)))
-      .filter(col("was_match") =!= col("now_match"))
-      .pipe(keep("changedEdges"))
-
-    // labels to dissolve: components an added/removed edge touches, plus the
-    // labels of every dirty url (a dirty url's validity or membership can
-    // change even with no edge flips)
-    val changedUrls = changedEdges.select(col("url_a").as("url"))
-      .union(changedEdges.select(col("url_b").as("url")))
-      .union(dirtyUrls.select("url"))
-      .distinct()
-    val affectedLabels = base.clusters
-      .join(broadcast(changedUrls), Seq("url"), "left_semi")
-      .select(col("cluster_id")).distinct()
-      .pipe(keep("affectedLabels"))
-
-    // re-solve subgraph: all members of dissolved labels plus dirty urls that
-    // are valid nodes under their merged winner; edges = base edges among
-    // members (components are edge-closed, so a member edge cannot leave the
-    // member set) minus removed flips plus added flips
-    val memberUrls = base.clusters
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url")
-    val dirtyValidNodes = mergedTouchedPages
-      .join(broadcast(dirtyUrls), Seq("url"), "left_semi")
-      .filter(col("lang") === "en" && col("invariant_ok"))
-      .select("url")
-    val subNodes = memberUrls.join(broadcast(dirtyUrls), Seq("url"), "left_anti")
-      .union(dirtyValidNodes).distinct()
-    val memberEdges = base.scored.filter(col("is_match"))
-      .join(memberUrls.withColumnRenamed("url", "url_a"), Seq("url_a"), "left_semi")
-      .select("url_a", "url_b")
-    val removed = changedEdges.filter(col("was_match")).select("url_a", "url_b")
-    val added = changedEdges.filter(col("now_match")).select("url_a", "url_b")
-    val subEdges = memberEdges
-      .join(removed, Seq("url_a", "url_b"), "left_anti")
-      .unionByName(added)
-      .withColumn("is_match", lit(true))
-
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
-
-    val clustersMerged = base.clusters
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id"))
-
-    // merged s0/s1 views for chaining (caller may checkpoint as a new base).
-    // pages swaps in the recomputed winner for EVERY delta url (not just
-    // dirty ones): a content-identical re-send with a later warc_ts is a
-    // semantic no-op but the batch s0 carries the later row, and the merged
-    // view must match it byte-for-byte
-    val pagesMerged = base.pages.join(broadcast(deltaUrls), Seq("url"), "left_anti")
-      .unionByName(mergedTouchedPages)
-    val mentionsMerged = base.mentions.join(broadcast(dirtyUrls), Seq("url"), "left_anti")
-      .unionByName(newDirtyMentions)
-
-    // merged s2/s2_overflow/s3 for chaining: untouched rows verbatim;
-    // touched blocks get the recomputed cap (newTouchedBlocks IS the batch
-    // cap over the merged raw membership) and its rank>cap remainder;
-    // changed pairs get their recomputed min generating block id
-    val baseCols = base.blocks.columns.toSeq
-    val blocksMerged = base.blocks
-      .join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
-      .unionByName(newTouchedBlocks.select(baseCols.head, baseCols.tail: _*))
-    val overflowMerged = base.blockOverflow.map { o =>
-      o.join(broadcast(touchedKeys), Seq("block_key"), "left_anti")
-        .unionByName(
-          Blocking.capBlocksOverflow(mergedRawTouched, cfg.maxBlock)
-            .select(o.columns.head, o.columns.tail: _*))
-    }
-    val pairsMerged = base.pairs
-      .join(broadcast(mpPKeys), Seq("mid_a", "mid_b"), "left_anti")
-      .unionByName(changedCands)
-
-    AttachResult(clustersMerged, scoredMerged, mentionsMerged, pagesMerged,
-      blocksMerged, overflowMerged, pairsMerged,
-      dirtyUrls, touchedKeys, rescored, changedEdges, affectedLabels)
   }
 
   /** Incrementally DELETE urls from a committed base (takedown / right-to-
@@ -548,15 +510,14 @@ object Incremental {
     * `deletedUrls` is one `url` column of CANONICAL urls (as committed in
     * the base state); urls absent from the base are no-ops. */
   def detach(spark: SparkSession, base: BaseState, deletedUrls: DataFrame,
-      dict: DataFrame, cfg: PipelineConfig,
-      verbose: Boolean = false): AttachResult = {
+      dict: DataFrame, cfg: PipelineConfig): AttachResult = {
     val tombstones = deletedUrls.select(
       col("url"),
       lit(java.sql.Timestamp.valueOf("9999-01-01 00:00:00")).as("warc_ts"),
       lit(Array.emptyByteArray).as("html"),
       lit("").as("text"),
       lit("xx").as("lang"))
-    val res = attach(spark, base, tombstones, dict, cfg, verbose)
+    val res = attach(spark, base, tombstones, dict, cfg)
     res.copy(
       pages = res.pages.join(deletedUrls.select("url"), Seq("url"), "left_anti"))
   }

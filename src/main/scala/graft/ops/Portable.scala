@@ -64,19 +64,6 @@ object Portable {
     inter.cast("double") / (size(a) + size(b) - inter).cast("double")
   }
 
-  /** Shared candidate machinery: explode per-id bucket strings, drop buckets
-    * over maxBucket (stop-key cap, same semantics as the production family),
-    * emit distinct (id_a < id_b) pairs. */
-  private def cappedCandidates(keyed: DataFrame, maxBucket: Int): DataFrame = {
-    val sized = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket && col("n") > 1)
-    val inB = keyed.join(sized, "bucket")
-    inB.as("a").join(inB.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
-
   /** Portable near-dup over any element-set column: md5-minhash band
     * candidates (capped), exact set-Jaccard verification, CC clustering.
     * Output (idCol, dup_of) like the production family. */
@@ -89,7 +76,7 @@ object Portable {
       val keyed = sets.select(col("id"),
         explode(bandBuckets(md5MinhashSig(col("sh"), numHashes), bands, rows))
           .as("bucket"))
-      val verified = cappedCandidates(keyed, maxBucket)
+      val verified = DeltaDedup.cappedPairs(keyed, maxBucket)
         .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
         .filter(setJaccard(col("sh_a"), col("sh_b")) >= threshold)
@@ -115,15 +102,13 @@ object Portable {
   def nearDupMd5Incremental(spark: SparkSession, docs: DataFrame, idCol: String,
       setCol: Column, threshold: Double, numHashes: Int = 16, bands: Int = 8,
       rows: Int = 2, maxBucket: Int = 256): DataFrame = {
-    // eager plan-cut leaves, not persist() — see erClustersPortableIncremental
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
     val isDelta = substring(md5(col("id").cast("string")), 1, 1)
       .isin("c", "d", "e", "f")
-    val sets = keep(docs.select(col(idCol).as("id"), setCol.as("sh")))
+    val sets = Cut.keep("g16_sets")(docs.select(col(idCol).as("id"), setCol.as("sh")))
     // materialized ONCE: the md5 minhash signature over every shingle is the
     // twin's dominant cost, and the base/delta split below would otherwise
     // recompute it per filter
-    val keyedAll = keep(sets.select(col("id"),
+    val keyedAll = Cut.keep("g16_keyedAll")(sets.select(col("id"),
       explode(bandBuckets(md5MinhashSig(col("sh"), numHashes), bands, rows))
         .as("bucket"))
       .withColumn("is_delta", isDelta))
@@ -135,8 +120,9 @@ object Portable {
       .select("id_a", "id_b")
 
     // committed base state (in-query here; stage tables in a deployment)
-    val baseEdges = keep(verify(DeltaDedup.cappedPairs(keyedB, maxBucket)))
-    val clustersB = keep(Clustering.clusters(spark,
+    val baseEdges = Cut.keep("g16_baseEdges")(
+      verify(DeltaDedup.cappedPairs(keyedB, maxBucket)))
+    val clustersB = Cut.keep("g16_clustersB")(Clustering.clusters(spark,
       baseEdges.select(DeltaDedup.key(col("id_a")).as("url_a"),
         DeltaDedup.key(col("id_b")).as("url_b"), lit(true).as("is_match")),
       keyedB.select(DeltaDedup.key(col("id")).as("url")).distinct()))
@@ -157,11 +143,10 @@ object Portable {
   def nearDupMd5Detach(spark: SparkSession, docs: DataFrame, idCol: String,
       setCol: Column, threshold: Double, numHashes: Int = 16, bands: Int = 8,
       rows: Int = 2, maxBucket: Int = 256): DataFrame = {
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
     val isDeleted = substring(md5(col("id").cast("string")), 1, 1)
       .isin("c", "d", "e", "f")
-    val sets = keep(docs.select(col(idCol).as("id"), setCol.as("sh")))
-    val keyedAll = keep(sets.select(col("id"),
+    val sets = Cut.keep("g17_sets")(docs.select(col(idCol).as("id"), setCol.as("sh")))
+    val keyedAll = Cut.keep("g17_keyedAll")(sets.select(col("id"),
       explode(bandBuckets(md5MinhashSig(col("sh"), numHashes), bands, rows))
         .as("bucket")))
     def verify(cands: DataFrame) = cands
@@ -171,8 +156,9 @@ object Portable {
       .select("id_a", "id_b")
 
     // committed base state over the FULL table
-    val baseEdges = keep(verify(DeltaDedup.cappedPairs(keyedAll, maxBucket)))
-    val clustersB = keep(Clustering.clusters(spark,
+    val baseEdges = Cut.keep("g17_baseEdges")(
+      verify(DeltaDedup.cappedPairs(keyedAll, maxBucket)))
+    val clustersB = Cut.keep("g17_clustersB")(Clustering.clusters(spark,
       baseEdges.select(DeltaDedup.key(col("id_a")).as("url_a"),
         DeltaDedup.key(col("id_b")).as("url_b"), lit(true).as("is_match")),
       keyedAll.select(DeltaDedup.key(col("id")).as("url")).distinct()))
@@ -216,7 +202,7 @@ object Portable {
           concat(lit("b"), lit(b.toString), lit(":"),
             shiftrightunsigned(col("sh"), b * 15).bitwiseAND(lit(32767L))
               .cast("string"))): _*)).as("bucket"))
-      val verified = cappedCandidates(keyed, maxBucket)
+      val verified = DeltaDedup.cappedPairs(keyed, maxBucket)
         .join(hashed.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(hashed.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
         .filter(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= maxHamming)
@@ -269,7 +255,7 @@ object Portable {
     val ok = portableOk(pages)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cands = cappedCandidates(portableBuckets(portableMen(ok), dict), maxBlock)
+      val cands = DeltaDedup.cappedPairs(portableBuckets(portableMen(ok), dict), maxBlock)
       val verified = portableVerify(cands, portableToks(ok), minShared)
       // s5: CC over url strings (eager: every round materializes, so the
       // returned frame reads only the converged cut — safe to unpersist ok)
@@ -305,6 +291,7 @@ object Portable {
     * buckets over char-3-shingles of the normalized key → (bucket, id). */
   private[ops] def portableBuckets(men: DataFrame, dict: DataFrame): DataFrame = {
     val dictKeys = dict.select(col("entity_id"), explode(col("keys")).as("nk"))
+    // the ontology is an input table, not a cut (no exact stats): hinted
     val dictBlk = men.join(broadcast(dictKeys), Seq("nk"))
       .select(concat(lit("e:"), col("entity_id")).as("bucket"), col("url"))
     val sh3 = when(length(col("nk")) < 3, array(col("nk"))).otherwise(
@@ -340,16 +327,15 @@ object Portable {
     * corpus. Output shape matches g01 (cluster_id, cluster_size). */
   def erClustersPortableDetach(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
     val isDeleted = substring(md5(col("url")), 1, 1).isin("c", "d", "e", "f")
-    val ok = keep(portableOk(pages))
-    val blk = keep(portableBuckets(portableMen(ok), dict))
-    val toks = keep(portableToks(ok))
+    val ok = Cut.keep("g18_ok")(portableOk(pages))
+    val blk = Cut.keep("g18_blk")(portableBuckets(portableMen(ok), dict))
+    val toks = Cut.keep("g18_toks")(portableToks(ok))
     def verify(cands: DataFrame) = portableVerify(cands, toks, minShared)
 
     // committed base state over the FULL fixture
-    val edgesB = keep(verify(cappedCandidates(blk, maxBlock)))
-    val clustersB = keep(Clustering.clusters(spark,
+    val edgesB = Cut.keep("g18_edgesB")(verify(DeltaDedup.cappedPairs(blk, maxBlock)))
+    val clustersB = Cut.keep("g18_clustersB")(Clustering.clusters(spark,
       edgesB.select(col("id_a").as("url_a"), col("id_b").as("url_b"),
         lit(true).as("is_match")),
       ok.select("url")))
@@ -357,127 +343,46 @@ object Portable {
     val att = DeltaDedup.detach(spark, blk,
       ok.filter(isDeleted).select(col("url").as("id")),
       edgesB, clustersB, verify, maxBlock, keyFn = identity)
-    keep(att.assign.filter(col("url") =!= col("cluster_id"))
+    Cut.keep("g18_detached")(att.assign.filter(col("url") =!= col("cluster_id"))
       .groupBy("cluster_id")
       .agg((count(lit(1)) + lit(1)).as("cluster_size")))
   }
 
   /** INCREMENTAL form of the portable ER twin (the cross-engine proof row
-    * for ops/Incremental's delta-maintenance algebra, g15): splits the
-    * fixture by a deterministic md5 url hash into a ~75% "base" corpus and a
-    * ~25% "delta" batch, resolves the base exactly as erComponentsPortable
-    * would, then ATTACHES the delta touching only delta-adjacent state —
-    * touched buckets, their regenerated candidates, survivors from untouched
-    * buckets, and a CC re-solve restricted to dissolved components — and
-    * returns the final (cluster_id, cluster_size) table. The DuckDB oracle
-    * replays the FULL BATCH twin over the whole fixture (the g01 SQL): hash
-    * equality IS the proof that the incremental algebra reproduces the batch
-    * result in an independent engine.
-    *
-    * The delta is inserts-only by construction (url-level split), which
-    * still exercises every structural case the attach algebra has: bucket
-    * eligibility flips (a bucket crossing the stop-key cap on insert DROPS
-    * its existing candidates — edge removal, cluster splits), new
-    * cross-cluster links (merges), survivors via untouched buckets, and
-    * isolated inserts. Snapshot-update deltas are exercised engine-side by
-    * IncrementalSpec against the production pipeline. The twin keeps the
-    * simpler UxU rescore set (endpoints of any touched-generated candidate);
-    * production ops/Incremental additionally restricts rescoring to the url
-    * pairs whose candidate set actually changed (delta-proportional P, not
-    * neighborhood UxU) — both forms are proven exact (this oracle row /
-    * IncrementalSpec). */
+    * for the ER delta-maintenance algebra, g15): splits the fixture by a
+    * deterministic md5 url hash into a ~75% "base" corpus and a ~25%
+    * "delta" batch, resolves the base exactly as erComponentsPortable
+    * would, then ATTACHES the delta via DeltaDedup.attach instantiated like
+    * the detach twin (combined dict+LSH bucket table, token-overlap
+    * verifier, keyFn=identity). The url-level split makes the delta
+    * inserts-only, and it still exercises every structural case: buckets
+    * crossing the stop-key cap (edge removal, cluster splits), new
+    * cross-cluster links (merges), survivors via untouched buckets and
+    * isolated inserts. The DuckDB oracle replays the FULL BATCH twin over
+    * the whole fixture (the g01 SQL): hash equality IS the proof that the
+    * incremental algebra reproduces the batch result in an independent
+    * engine. Snapshot-update deltas and the production rescore set are
+    * exercised engine-side by IncrementalSpec. */
   def erClustersPortableIncremental(spark: SparkSession, pages: DataFrame,
       dict: DataFrame, maxBlock: Int = 256, minShared: Int = 3): DataFrame = {
-    val isDelta = substring(md5(col("url")), 1, 1).isin("c", "d", "e", "f")
+    def isDelta(url: Column) = substring(md5(url), 1, 1).isin("c", "d", "e", "f")
+    val ok = Cut.keep("g15_ok")(portableOk(pages))
+    val blk = Cut.keep("g15_blk")(portableBuckets(portableMen(ok), dict)
+      .withColumn("is_delta", isDelta(col("id"))))
+    val toks = Cut.keep("g15_toks")(portableToks(ok))
+    def verify(cands: DataFrame) = portableVerify(cands, toks, minShared)
 
-    // Eager local checkpoints, NOT persist(): each keep() cuts the LOGICAL
-    // plan to a leaf, not just the execution lineage. The attach algebra
-    // references its intermediates multiply (self-joins, unions, old-vs-new
-    // diffs), so with persist() the analyzed plan grows exponentially with
-    // stage depth — measured: analysis time doubling per stage and a driver
-    // analyzer OOM at 800 fixture pages. Checkpoint blocks are reclaimed by
-    // the ContextCleaner once these frames go out of scope.
-    def keep(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-    val okB = keep(portableOk(pages.filter(!isDelta)))
-    val okD = keep(portableOk(pages.filter(isDelta)))
-    val blkB = keep(portableBuckets(portableMen(okB), dict))
-    val blkD = keep(portableBuckets(portableMen(okD), dict))
-    val toksAll = keep(portableToks(okB.unionByName(okD)))
-    // committed base state (in-query here; on disk in a deployment)
-    val edgesB = keep(portableVerify(cappedCandidates(blkB, maxBlock),
-      toksAll, minShared))
-    val clustersB = keep(Clustering.clusters(spark,
+    // committed base state over the non-delta urls
+    val edgesB = Cut.keep("g15_edgesB")(
+      verify(DeltaDedup.cappedPairs(blk.filter(!col("is_delta")), maxBlock)))
+    val clustersB = Cut.keep("g15_clustersB")(Clustering.clusters(spark,
       edgesB.select(col("id_a").as("url_a"), col("id_b").as("url_b"),
         lit(true).as("is_match")),
-      okB.select("url")))
+      ok.filter(!isDelta(col("url"))).select("url")))
 
-    // touched buckets: every bucket a delta url enters (inserts-only split
-    // ⇒ no bucket is left). Membership merged, eligibility recomputed —
-    // a bucket crossing the cap drops out WITH its existing candidates.
-    val touched = blkD.select("bucket").distinct()
-    val oldTouchedMembers = blkB.join(broadcast(touched), Seq("bucket"), "left_semi")
-    val newTouchedMembers = oldTouchedMembers.unionByName(blkD)
-    val oldTouchedCands = keep(cappedCandidates(oldTouchedMembers, maxBlock))
-    val newTouchedCands = keep(cappedCandidates(newTouchedMembers, maxBlock))
-
-    // affected url set U: endpoints of touched-generated candidates under
-    // either membership, plus every delta url
-    val affectedUrls = keep(oldTouchedCands.select(col("id_a").as("url"))
-      .union(oldTouchedCands.select(col("id_b").as("url")))
-      .union(newTouchedCands.select(col("id_a").as("url")))
-      .union(newTouchedCands.select(col("id_b").as("url")))
-      .union(okD.select("url"))
-      .distinct())
-
-    // survivors: candidate pairs inside UxU that an UNTOUCHED, still-
-    // eligible bucket generates (untouched membership is unchanged)
-    val blkUntouched = blkB.join(broadcast(touched), Seq("bucket"), "left_anti")
-      .join(affectedUrls.withColumnRenamed("url", "id"), Seq("id"), "left_semi")
-    val eligible = blkB.join(broadcast(touched), Seq("bucket"), "left_anti")
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBlock && col("n") > 1)
-    val inElig = blkUntouched.join(eligible.select("bucket"), Seq("bucket"), "left_semi")
-    val survivors = inElig.as("a").join(inElig.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-
-    // full candidate set for UxU → rescore → changed edges
-    val newCandsUU = newTouchedCands.unionByName(survivors).distinct()
-    val newEdgesUU = keep(portableVerify(newCandsUU, toksAll, minShared))
-    val inU = (c: String) => affectedUrls.withColumnRenamed("url", c)
-    val oldEdgesUU = edgesB
-      .join(inU("id_a"), Seq("id_a"), "left_semi")
-      .join(inU("id_b"), Seq("id_b"), "left_semi")
-    val removed = keep(oldEdgesUU.exceptAll(newEdgesUU))
-    val added = keep(newEdgesUU.exceptAll(oldEdgesUU))
-
-    // dissolve components an edge flip (or a delta url) touches; re-solve
-    // the subgraph; everything else keeps its base label
-    val changedUrls = removed.select(col("id_a").as("url"))
-      .union(removed.select(col("id_b").as("url")))
-      .union(added.select(col("id_a").as("url")))
-      .union(added.select(col("id_b").as("url")))
-      .union(okD.select("url"))
-      .distinct()
-    val affectedLabels = keep(clustersB.join(changedUrls, Seq("url"), "left_semi")
-      .select("cluster_id").distinct())
-    val memberUrls = clustersB
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_semi")
-      .select("url")
-    val subNodes = memberUrls.union(okD.select("url")).distinct()
-    val memberEdges = edgesB
-      .join(memberUrls.withColumnRenamed("url", "id_a"), Seq("id_a"), "left_semi")
-    val subEdges = memberEdges.exceptAll(removed).unionByName(added)
-      .select(col("id_a").as("url_a"), col("id_b").as("url_b"),
-        lit(true).as("is_match"))
-    val resolved = Clustering.clusters(spark, subEdges, subNodes)
-
-    val finalAssign = clustersB
-      .join(broadcast(affectedLabels), Seq("cluster_id"), "left_anti")
-      .select("url", "cluster_id")
-      .unionByName(resolved.select("url", "cluster_id"))
-    // erClustersPortable output shape: non-representative member counts.
-    keep(finalAssign.filter(col("url") =!= col("cluster_id"))
+    val att = DeltaDedup.attach(spark, blk, edgesB, clustersB, verify,
+      maxBlock, keyFn = identity)
+    Cut.keep("g15_attached")(att.assign.filter(col("url") =!= col("cluster_id"))
       .groupBy("cluster_id")
       .agg((count(lit(1)) + lit(1)).as("cluster_size")))
   }
@@ -540,7 +445,7 @@ object Portable {
         axisSignBucket(col(vecCol), nPlanes).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val verified = cappedCandidates(bucketed.select("id", "bucket"), maxBucket)
+      val verified = DeltaDedup.cappedPairs(bucketed.select("id", "bucket"), maxBucket)
         .join(bucketed.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
         .join(bucketed.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
         .filter(graft.functions.cosine_sim(col("v_a"), col("v_b")) >= threshold)

@@ -116,17 +116,16 @@ object TextOps {
     * Scale shape: the eval set is tiny relative to a 10^12-doc corpus, so
     * its exploded n-gram table is BROADCAST and the training side is one
     * scan + explode + hash-agg — no corpus-sized shuffle. The broadcast is
-    * byte-GATED (round-5 advice): the exploded table's size is estimated
-    * with one cheap agg over the (small) eval side, and past the cap the
-    * hint is dropped so the same plan shuffles on the n-gram key instead of
-    * hitting Spark's 8 GiB broadcast-relation limit. Both paths compute
-    * identical rows (join strategy only — unit-pinned). */
+    * byte-GATED (round-5 advice): the exploded eval table is kept once
+    * (Cut.keep), its recorded bytes decide, and past the cap the same plan
+    * sort-merges on the n-gram key instead of hitting Spark's 8 GiB
+    * broadcast-relation limit. Both paths compute identical rows (join
+    * strategy only — unit-pinned). */
   def decontaminate(train: DataFrame, evalDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       n: Int = 8,
-      /** Max estimated bytes of the exploded eval n-gram table to
-        * broadcast; <0 derives min(2 GiB, driver heap / 10) — the same
-        * policy as PipelineConfig.resolvedBroadcastMentionsMaxBytes. */
+      /** Max bytes of the exploded eval n-gram table to broadcast; <0
+        * takes Cut.defaultBroadcastCap. */
       broadcastEvalMaxBytes: Long = -1L): DataFrame = {
     // token array projected FIRST, n-grams built from the attribute — the
     // one-select composition re-evaluates the tokenizer inside every lambda
@@ -136,15 +135,13 @@ object TextOps {
         filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0).as("__tk"))
       .select(col("__id"),
         explode(Portable.wordNgramsFromTokens(col("__tk"), n)).as("ng"))
-    val evalNg = ngrams(evalDocs, col(idCol)).withColumnRenamed("__id", "eval_id")
+    val evalNg = Cut.keep("decontaminate_evalNg")(
+      ngrams(evalDocs, col(idCol)).withColumnRenamed("__id", "eval_id"))
     val trainNg = ngrams(train, col(idCol)).withColumnRenamed("__id", idCol)
     val cap =
-      if (broadcastEvalMaxBytes >= 0) broadcastEvalMaxBytes
-      else math.min(2L * 1024 * 1024 * 1024, Runtime.getRuntime.maxMemory / 10)
-    val evalBytes = evalNg.agg(coalesce(
-      sum(octet_length(col("ng")).cast("long") + lit(24L)),
-      lit(0L))).head().getLong(0)
-    val evalSide = if (evalBytes <= cap) broadcast(evalNg) else evalNg
+      if (broadcastEvalMaxBytes >= 0) broadcastEvalMaxBytes else Cut.defaultBroadcastCap
+    val evalSide =
+      if (Cut.bytes(evalNg) <= cap) broadcast(evalNg) else evalNg.hint("merge")
     trainNg.join(evalSide, "ng")
       .groupBy(idCol)
       .agg(countDistinct("eval_id").as("n_eval_docs"),

@@ -18,7 +18,8 @@ import graft.ops.Incremental
   * operator actually faces when a crawl delta lands: re-run the whole
   * pipeline, or attach. Reported locality counters (dirty urls, touched
   * blocks, rescored pairs, dissolved labels) are the delta-proportionality
-  * evidence at the measured size.
+  * evidence at the measured size. The graft.ops.Cut logger is raised to
+  * INFO, so each attach intermediate logs its wall, rows and bytes.
   *
   * Usage: IncrAB <nPages> <nEntities> <deltaPctUrls> [reps]
   */
@@ -38,6 +39,9 @@ object IncrAB {
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // per-cut breakdown of the attach (name, wall, rows, bytes)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.ops.Cut", org.apache.logging.log4j.Level.INFO)
 
     val p = SynthParams(nPages = nPages, nEntities = nEntities)
     val root = Files.createTempDirectory("graft-incrab").toString
@@ -75,8 +79,7 @@ object IncrAB {
       // same deliverables (merged clusters + merged scored row counts)
       val base = Incremental.stateFromCheckpoint(spark, baseCfg.checkpointDir)
       val tA0 = System.nanoTime()
-      val res = Incremental.attach(spark, base, deltaInput, dict, baseCfg,
-        verbose = true)
+      val res = Incremental.attach(spark, base, deltaInput, dict, baseCfg)
       val attachClusters = res.clusters.select("cluster_id").distinct().count()
       val scoredRows = res.scored.count()
       val wallAttach = (System.nanoTime() - tA0) / 1e9

@@ -8,7 +8,7 @@ import graft.ops.{Ann, Dedup}
 /** Dev tool: dump the round-6 plan-audit artifacts (plans/r06) for the
   * BATCH queries this round touched — static formatted plans for the
   * frames whose shape changed. The incremental paths' per-intermediate
-  * plans are dumped by the GRAFT_EXPLAIN_DIR hook (ops/Diag) during a
+  * plans are dumped by the GRAFT_EXPLAIN_DIR hook (ops/Cut) during a
   * tools/IncrAB + tools/DedupIncrAB run instead.
   *
   * Usage: R6Plans <outDir> [sfDir]

@@ -218,6 +218,7 @@ class AnnTextOpsSpec extends SparkSpec {
       broadcastEvalMaxBytes = 0L)
     shuffled.queryExecution.analyzed.toString should not include "broadcast"
     bcast.queryExecution.analyzed.toString should include("broadcast")
+    shuffled.queryExecution.executedPlan.toString should include("SortMergeJoin")
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2))
     shuffled.collect().map(key).sortBy(_._1).toSeq shouldBe

@@ -124,6 +124,36 @@ class DedupSpec extends SparkSpec {
     ed.keySet should not contain 2L
   }
 
+  test("minhashDedupState broadcasts nothing when the planner may not") {
+    // the batch builder's id set grows with the corpus: it must follow the
+    // planner's threshold, not a forced hint
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "-1")
+      try Dedup.minhashDedupState(spark, docs(), threshold = 0.7)
+      finally spark.conf.set(key, prev)
+      // listener events arrive in order: once the sentinel is seen, every
+      // plan the builder executed has been recorded
+      spark.range(0, 7919).count()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!plans.toArray.exists(_.toString.contains("7919")) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val built = plans.toArray.map(_.toString).filterNot(_.contains("7919"))
+    built should not be empty
+    built.foreach(_ should not include "BroadcastExchange")
+  }
+
   test("charShingles matches the definition") {
     val r = Seq("abcdef").toDF("t")
       .select(Dedup.charShingles(col("t"), 3)).as[Seq[String]].head()

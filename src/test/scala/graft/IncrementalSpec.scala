@@ -136,6 +136,13 @@ class IncrementalSpec extends SparkSpec {
         saltThreshold = 8, nSalts = 4))
   }
 
+  test("attach == full recompute with every join shuffled (broadcast cap 0)") {
+    // cap 0: attach plans its algebra with no size-based broadcast and
+    // hydrates by shuffle — the shuffle fallback must give the same tables
+    runCase(SynthParams(nPages = 1500, nEntities = 150),
+      PipelineConfig(checkpointDir = "unused", broadcastMentionsMaxBytes = 0L))
+  }
+
   test("attach work is delta-proportional on a sparse corpus") {
     // Locality is a DENSITY property, not just an algebra property: on the
     // dense exactness fixtures (~10 pages/entity, ~30% dirty urls) nearly
